@@ -10,13 +10,20 @@ order-insensitive value hash is stable.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_editor_spark.litexpr import lit_doubles as _lit_doubles
 from parquet_editor_spark.operators import query as q
+
+# UDF bodies below call this module's fixture helpers (_constant_image,
+# _constant_clip, _dhash_png): pickle them by value, so executors never
+# import this module (whatever name the caller loaded it under).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 SF1 = "/root/testdata/sf0.001"
 
@@ -1381,11 +1388,7 @@ def q_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     out = MM.attach_payload(docs, "text", media_type="image", codec="fake")
-    return out.select(
-        "doc_id",
-        F.col("meta.n_bytes").alias("n_bytes"),
-        F.col("meta.checksum").alias("checksum"),
-    )
+    return out.select("doc_id", "meta.n_bytes", "meta.checksum")
 
 
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1419,6 +1422,180 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# media fixtures — payload bytes synthesized per doc_id on the executors;
+# multimodal.attach_payload adds the typed ``meta`` struct
+# ---------------------------------------------------------------------------
+
+
+def _doc_payloads(
+    docs: DataFrame, make: Callable[[int], bytes]
+) -> DataFrame:
+    """One Arrow ``gen`` stage: ``docs`` → ``(doc_id, payload)`` with
+    ``payload = make(doc_id)``, built executor-side.  Every media
+    fixture whose bytes depend only on ``doc_id`` goes through it."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("payload", T.BinaryType()),
+        ]
+    )
+
+    def gen(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["payload"] = [make(int(i)) for i in pdf["doc_id"]]
+            yield pdf[["doc_id", "payload"]]
+
+    return docs.mapInPandas(gen, schema=schema)
+
+
+def _constant_image(codec: str, w: int, h: int, v: int) -> bytes:
+    """A ``w``×``h`` gray image of constant value ``v`` encoded as
+    ``codec`` (png, jpeg, gif, bmp or tiff).  Every codec decodes it
+    back to exactly ``v``: the lossless ones trivially, JPEG because a
+    DC quant step of 8 makes a flat field's only nonzero coefficient
+    (DC = 8·(v−128)) lossless — pinned by
+    test_constant_gray_roundtrips_exactly."""
+    pix = bytes([v]) * (w * h)
+    if codec == "png":
+        from parquet_editor_spark.sources.png import encode_png
+
+        return encode_png(w, h, 1, pix)
+    if codec == "jpeg":
+        import numpy as np
+
+        from parquet_editor_spark.sources.jpeg_codec import (
+            encode_jpeg_baseline,
+        )
+
+        qt = (np.full(64, 8, dtype=np.int64), np.full(64, 8, dtype=np.int64))
+        return encode_jpeg_baseline(w, h, 1, pix, quant_tables=qt)
+    if codec == "gif":
+        from parquet_editor_spark.sources.gif import encode_gif
+
+        return encode_gif(w, h, 1, pix)
+    if codec == "bmp":
+        from parquet_editor_spark.sources.bmp import encode_bmp
+
+        return encode_bmp(w, h, 1, pix)
+    if codec == "tiff":
+        from parquet_editor_spark.sources.tiff import encode_tiff
+
+        return encode_tiff(w, h, 1, pix, compression=5)
+    raise ValueError(f"no constant-image encoder for codec {codec!r}")
+
+
+def _constant_clip(codec: str, w: int, h: int, vals: list[int]) -> bytes:
+    """A 25 fps clip whose frame ``j`` is the constant field
+    ``vals[j]``: raw planar YUV 4:2:0 for ``codec="y4m"``, per-frame
+    DC-8 JPEG (``_constant_image``) inside AVI for ``"avi"`` — both
+    decode back to exactly ``vals``."""
+    if codec == "y4m":
+        from parquet_editor_spark.sources.y4m import encode_y4m
+
+        fb = w * h * 3 // 2
+        return encode_y4m(w, h, (25, 1), [bytes([v]) * fb for v in vals])
+    from parquet_editor_spark.sources.avi import encode_avi_mjpeg
+
+    return encode_avi_mjpeg(
+        w, h, (25, 1), [_constant_image("jpeg", w, h, v) for v in vals]
+    )
+
+
+def _dhash_png(i: int, group: int) -> bytes:
+    """A 9×8 PNG whose dHash equals splitmix64(i // group) by
+    construction (each row starts at 128 and steps ±8 per hash bit),
+    GRAY when ``(i // 37)`` is even and RGB (r=g=b) otherwise — the
+    same pixels in two layouts, the cross-encode duplicate."""
+    import numpy as np
+
+    from parquet_editor_spark.sources.png import encode_png
+
+    M = (1 << 64) - 1
+    x = (i // group + 0x9E3779B97F4A7C15) & M
+    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & M
+    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & M
+    bits64 = x ^ (x >> 31)
+    rows = []
+    for r in range(8):
+        v = 128
+        rows.append(v)
+        for c in range(8):
+            bit = (bits64 >> (63 - (r * 8 + c))) & 1
+            v = v + 8 if bit else v - 8
+            rows.append(v)
+    gray = bytes(rows)
+    if (i // 37) % 2 == 0:
+        return encode_png(9, 8, 1, gray)
+    rgb = bytes(np.repeat(np.frombuffer(gray, np.uint8), 3))
+    return encode_png(9, 8, 3, rgb)
+
+
+def _wav_constant_roundtrip(
+    spark: SparkSession,
+    sf_dir: str,
+    every: int,
+    make: Callable[[int], bytes],
+) -> DataFrame:
+    """Shared body of the constant-clip WAV codec round-trips: every
+    ``every``-th doc gets ``make(doc_id)`` — a WAV whose codec
+    reproduces a constant 16-bit clip bit-exactly — run through the
+    production ``audio_meta`` wav path, then decoded to
+    first/min/max samples (all equal to the constant, so the DuckDB
+    oracle is closed-form on doc_id)."""
+    from pyspark.sql import types as T
+
+    from parquet_editor_spark.operators import multimodal as MM
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id")
+        .filter(F.col("doc_id") % every == 0)
+    )
+    metaed = MM.audio_meta(
+        MM.attach_payload(_doc_payloads(docs, make), "payload", "audio", "wav")
+    )
+
+    out_schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("sample_rate", T.IntegerType()),
+            T.StructField("channels", T.IntegerType()),
+            T.StructField("n_frames", T.LongType()),
+            T.StructField("duration_ms", T.LongType()),
+            T.StructField("first_sample", T.IntegerType()),
+            T.StructField("min_sample", T.IntegerType()),
+            T.StructField("max_sample", T.IntegerType()),
+        ]
+    )
+
+    def decode_samples(batches):
+        import numpy as np
+
+        from parquet_editor_spark.sources.wav import decode_wav
+
+        for pdf in batches:
+            firsts, mins, maxs = [], [], []
+            for p in pdf["payload"]:
+                _r, _c, _b, _n, frames = decode_wav(bytes(p))
+                s = np.frombuffer(frames, dtype="<i2")
+                firsts.append(int(s[0]))
+                mins.append(int(s.min()))
+                maxs.append(int(s.max()))
+            pdf = pdf.copy()
+            pdf["first_sample"] = firsts
+            pdf["min_sample"] = mins
+            pdf["max_sample"] = maxs
+            yield pdf[[f.name for f in out_schema.fields]]
+
+    return metaed.mapInPandas(decode_samples, schema=out_schema).orderBy(
+        "doc_id"
+    )
+
+
 def q_jpeg_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL JPEG metadata path, no libjpeg (sources/jpeg.py; r7
     verdict item 7): per doc, synthesize a structurally-valid JPEG
@@ -1430,8 +1607,6 @@ def q_jpeg_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     differential checks the whole Spark-side header-parse path
     against closed-form truth.  Pixel decode stays an honest
     ``NotImplementedError`` (needs libjpeg)."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -1440,36 +1615,13 @@ def q_jpeg_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 13 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int) -> bytes:
         from parquet_editor_spark.sources.jpeg import make_jpeg_header
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                make_jpeg_header(
-                    16 + int(i) % 613,
-                    16 + (int(i) * 7) % 489,
-                    1 + int(i) % 4,
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pdf[["doc_id", "payload"]]
+        return make_jpeg_header(16 + i % 613, 16 + (i * 7) % 489, 1 + i % 4)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("jpeg").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "image", "jpeg"
     )
     return (
         MM.decode_meta(with_payload)
@@ -1485,8 +1637,6 @@ def q_flac_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     production ``audio_meta`` stage (Arrow mapInPandas, executor-side
     bitfield parse), emit the decoded fields.  Oracle: closed-form
     arithmetic on doc_id, including the integer floor duration."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -1495,37 +1645,18 @@ def q_flac_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 11 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int) -> bytes:
         from parquet_editor_spark.sources.flac import make_flac_header
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                make_flac_header(
-                    8000 + (int(i) % 11) * 4000,
-                    1 + int(i) % 8,
-                    8 + (int(i) % 4) * 8,
-                    1000 + (int(i) * 37) % 100000,
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pdf[["doc_id", "payload"]]
+        return make_flac_header(
+            8000 + (i % 11) * 4000,
+            1 + i % 8,
+            8 + (i % 4) * 8,
+            1000 + (i * 37) % 100000,
+        )
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("flac").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "audio", "flac"
     )
     return (
         MM.audio_meta(with_payload)
@@ -1542,8 +1673,6 @@ def q_mp4_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     height) — and run the production ``video_meta`` box walk on the
     executors.  Oracle: closed-form arithmetic on doc_id with the
     audio-only NULL case."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -1552,43 +1681,20 @@ def q_mp4_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 7 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int) -> bytes:
         from parquet_editor_spark.sources.mp4 import make_mp4_header
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                audio_only = i % 3 == 0
-                payloads.append(
-                    make_mp4_header(
-                        1000 + (i * 13) % 3600000,
-                        timescale=1000,
-                        width=None if audio_only else 320 + (i % 5) * 160,
-                        height=None if audio_only else 240 + (i % 3) * 120,
-                        n_tracks=1 + i % 3,
-                    )
-                )
-            pdf = pdf.copy()
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        audio_only = i % 3 == 0
+        return make_mp4_header(
+            1000 + (i * 13) % 3600000,
+            timescale=1000,
+            width=None if audio_only else 320 + (i % 5) * 160,
+            height=None if audio_only else 240 + (i % 3) * 120,
+            n_tracks=1 + i % 3,
+        )
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.lit("mp4").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "video", "mp4"
     )
     return (
         MM.video_meta(with_payload)
@@ -1606,8 +1712,6 @@ def q_mp3_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas, executor-side frame-header walk).  Oracle:
     closed-form arithmetic on doc_id — samples = frames × 1152
     (MPEG-1 rates) or × 576 (MPEG-2/2.5 rates)."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -1616,51 +1720,24 @@ def q_mp3_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 23 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
     _RATES9 = (44100, 48000, 32000, 22050, 24000, 16000, 11025, 12000, 8000)
 
-    def gen(batches):
+    def make(i: int) -> bytes:
         from parquet_editor_spark.sources.mp3 import make_mp3
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                rate = _RATES9[i % 9]
-                kbps = (
-                    (32, 128, 320)[i % 3]
-                    if i % 9 < 3
-                    else (16, 64, 160)[i % 3]
-                )
-                payloads.append(
-                    make_mp3(
-                        rate,
-                        channels=1 + i % 2,
-                        n_frames=3 + (i * 7) % 40,
-                        bitrate_kbps=kbps,
-                        pad_alternate=i % 5 == 0,
-                        id3v2_bytes=(57 + i % 100) if i % 2 == 0 else 0,
-                        id3v1=i % 3 == 0,
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        kbps = (32, 128, 320)[i % 3] if i % 9 < 3 else (16, 64, 160)[i % 3]
+        return make_mp3(
+            _RATES9[i % 9],
+            channels=1 + i % 2,
+            n_frames=3 + (i * 7) % 40,
+            bitrate_kbps=kbps,
+            pad_alternate=i % 5 == 0,
+            id3v2_bytes=(57 + i % 100) if i % 2 == 0 else 0,
+            id3v1=i % 3 == 0,
+        )
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("mp3").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "audio", "mp3"
     )
     return (
         MM.audio_meta(with_payload)
@@ -1679,91 +1756,18 @@ def q_wav_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and emit first/min/max — all equal to the constant, so the DuckDB
     oracle is closed-form on doc_id while the Spark side exercises the
     full numpy block decode."""
-    from pyspark.sql import types as T
-
-    from parquet_editor_spark.operators import multimodal as MM
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 29 == 0)
-    )
-
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int) -> bytes:
         import numpy as np
 
         from parquet_editor_spark.sources.wav import encode_wav_adpcm
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                v = (i * 131) % 30001 - 15000
-                ch = 1 + i % 2
-                n = 100 + (i * 3) % 1500
-                pcm = np.full(n * ch, v, dtype="<i2")
-                payloads.append(
-                    encode_wav_adpcm(
-                        8000 + (i % 4) * 4000, ch, pcm.tobytes()
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        v = (i * 131) % 30001 - 15000
+        ch = 1 + i % 2
+        n = 100 + (i * 3) % 1500
+        pcm = np.full(n * ch, v, dtype="<i2")
+        return encode_wav_adpcm(8000 + (i % 4) * 4000, ch, pcm.tobytes())
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("wav").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
-    )
-    metaed = MM.audio_meta(with_payload)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("n_frames", T.LongType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("first_sample", T.IntegerType()),
-            T.StructField("min_sample", T.IntegerType()),
-            T.StructField("max_sample", T.IntegerType()),
-        ]
-    )
-
-    def decode_samples(batches):
-        import numpy as np
-
-        from parquet_editor_spark.sources.wav import decode_wav
-
-        for pdf in batches:
-            firsts, mins, maxs = [], [], []
-            for p in pdf["payload"]:
-                _r, _c, _b, _n, frames = decode_wav(bytes(p))
-                s = np.frombuffer(frames, dtype="<i2")
-                firsts.append(int(s[0]))
-                mins.append(int(s.min()))
-                maxs.append(int(s.max()))
-            pdf = pdf.copy()
-            pdf["first_sample"] = firsts
-            pdf["min_sample"] = mins
-            pdf["max_sample"] = maxs
-            yield pdf[[f.name for f in out_schema.fields]]
-
-    return metaed.mapInPandas(decode_samples, schema=out_schema).orderBy(
-        "doc_id"
-    )
+    return _wav_constant_roundtrip(spark, sf_dir, 29, make)
 
 
 def q_wav_ms_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1775,91 +1779,18 @@ def q_wav_ms_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     production ``audio_meta`` wav path + sample stats.  Oracle:
     closed-form on doc_id while Spark runs the real cross-block numpy
     recurrence."""
-    from pyspark.sql import types as T
-
-    from parquet_editor_spark.operators import multimodal as MM
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 41 == 0)
-    )
-
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int) -> bytes:
         import numpy as np
 
         from parquet_editor_spark.sources.wav import encode_wav_ms_adpcm
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                v = (i * 173) % 50001 - 25000
-                ch = 1 + i % 2
-                n = 80 + (i * 11) % 1200
-                pcm = np.full(n * ch, v, dtype="<i2")
-                payloads.append(
-                    encode_wav_ms_adpcm(
-                        8000 + (i % 5) * 3000, ch, pcm.tobytes()
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        v = (i * 173) % 50001 - 25000
+        ch = 1 + i % 2
+        n = 80 + (i * 11) % 1200
+        pcm = np.full(n * ch, v, dtype="<i2")
+        return encode_wav_ms_adpcm(8000 + (i % 5) * 3000, ch, pcm.tobytes())
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("wav").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
-    )
-    metaed = MM.audio_meta(with_payload)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("n_frames", T.LongType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("first_sample", T.IntegerType()),
-            T.StructField("min_sample", T.IntegerType()),
-            T.StructField("max_sample", T.IntegerType()),
-        ]
-    )
-
-    def decode_samples(batches):
-        import numpy as np
-
-        from parquet_editor_spark.sources.wav import decode_wav
-
-        for pdf in batches:
-            firsts, mins, maxs = [], [], []
-            for p in pdf["payload"]:
-                _r, _c, _b, _n, frames = decode_wav(bytes(p))
-                s = np.frombuffer(frames, dtype="<i2")
-                firsts.append(int(s[0]))
-                mins.append(int(s.min()))
-                maxs.append(int(s.max()))
-            pdf = pdf.copy()
-            pdf["first_sample"] = firsts
-            pdf["min_sample"] = mins
-            pdf["max_sample"] = maxs
-            yield pdf[[f.name for f in out_schema.fields]]
-
-    return metaed.mapInPandas(decode_samples, schema=out_schema).orderBy(
-        "doc_id"
-    )
+    return _wav_constant_roundtrip(spark, sf_dir, 41, make)
 
 
 def q_wav_g711_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1872,93 +1803,20 @@ def q_wav_g711_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_g711_code_points_roundtrip_exactly).  Spark runs the real
     np.take expansion through ``audio_meta`` + a sample-stats stage;
     the DuckDB oracle is closed-form on doc_id."""
-    from pyspark.sql import types as T
-
-    from parquet_editor_spark.operators import multimodal as MM
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 37 == 0)
-    )
-
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int) -> bytes:
         import numpy as np
 
         from parquet_editor_spark.sources.wav import encode_wav_g711
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                law = "a" if i % 3 == 0 else "mu"
-                mag = 16 * (i % 16) + 8 if law == "a" else 8 * (i % 16)
-                v = mag if i % 2 == 0 else -mag
-                ch = 1 + i % 2
-                n = 50 + (i * 7) % 1000
-                pcm = np.full(n * ch, v, dtype="<i2")
-                payloads.append(
-                    encode_wav_g711(
-                        8000 * (1 + i % 3), ch, pcm.tobytes(), law=law
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        law = "a" if i % 3 == 0 else "mu"
+        mag = 16 * (i % 16) + 8 if law == "a" else 8 * (i % 16)
+        v = mag if i % 2 == 0 else -mag
+        ch = 1 + i % 2
+        n = 50 + (i * 7) % 1000
+        pcm = np.full(n * ch, v, dtype="<i2")
+        return encode_wav_g711(8000 * (1 + i % 3), ch, pcm.tobytes(), law=law)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("wav").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
-    )
-    metaed = MM.audio_meta(with_payload)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("n_frames", T.LongType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("first_sample", T.IntegerType()),
-            T.StructField("min_sample", T.IntegerType()),
-            T.StructField("max_sample", T.IntegerType()),
-        ]
-    )
-
-    def decode_samples(batches):
-        import numpy as np
-
-        from parquet_editor_spark.sources.wav import decode_wav
-
-        for pdf in batches:
-            firsts, mins, maxs = [], [], []
-            for p in pdf["payload"]:
-                _r, _c, _b, _n, frames = decode_wav(bytes(p))
-                s = np.frombuffer(frames, dtype="<i2")
-                firsts.append(int(s[0]))
-                mins.append(int(s.min()))
-                maxs.append(int(s.max()))
-            pdf = pdf.copy()
-            pdf["first_sample"] = firsts
-            pdf["min_sample"] = mins
-            pdf["max_sample"] = maxs
-            yield pdf[[f.name for f in out_schema.fields]]
-
-    return metaed.mapInPandas(decode_samples, schema=out_schema).orderBy(
-        "doc_id"
-    )
+    return _wav_constant_roundtrip(spark, sf_dir, 37, make)
 
 
 def q_jpeg_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1975,7 +1833,6 @@ def q_jpeg_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode); every fourth baseline doc carries restart markers.
     Oracle: closed-form arithmetic on doc_id."""
     import numpy as np
-    from pyspark.sql import types as T
 
     from parquet_editor_spark.operators import multimodal as MM
 
@@ -1985,61 +1842,30 @@ def q_jpeg_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 31 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    qt = (np.full(64, 8, dtype=np.int64), np.full(64, 8, dtype=np.int64))
 
-    def gen(batches):
-        import numpy as np
-
+    def make(i: int) -> bytes:
         from parquet_editor_spark.sources.jpeg_codec import (
             encode_jpeg_baseline,
             encode_jpeg_progressive,
         )
 
-        qt = (
-            np.full(64, 8, dtype=np.int64),
-            np.full(64, 8, dtype=np.int64),
+        w = 8 + i % 120
+        h = 8 + (i * 3) % 90
+        pix = bytes([(i * 17) % 256]) * (w * h)
+        if i % 3 == 0:
+            return encode_jpeg_progressive(w, h, 1, pix, quant_tables=qt)
+        return encode_jpeg_baseline(
+            w,
+            h,
+            1,
+            pix,
+            quant_tables=qt,
+            restart_interval=2 if i % 4 == 0 else 0,
         )
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                w = 8 + i % 120
-                h = 8 + (i * 3) % 90
-                v = (i * 17) % 256
-                if i % 3 == 0:
-                    payloads.append(
-                        encode_jpeg_progressive(
-                            w, h, 1, bytes([v]) * (w * h), quant_tables=qt
-                        )
-                    )
-                else:
-                    payloads.append(
-                        encode_jpeg_baseline(
-                            w,
-                            h,
-                            1,
-                            bytes([v]) * (w * h),
-                            quant_tables=qt,
-                            restart_interval=2 if i % 4 == 0 else 0,
-                        )
-                    )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("jpeg").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "image", "jpeg"
     )
     return (
         MM.image_pixel_stats(with_payload)
@@ -2103,14 +1929,9 @@ def q_gif_bmp_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["codec"] = codecs
             yield pdf[["doc_id", "payload", "codec"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    fixtures = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = MM.attach_payload(
+        fixtures, "payload", "image", F.col("codec")
     )
     return (
         MM.image_pixel_stats(with_payload)
@@ -2153,55 +1974,25 @@ def q_multimodal_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def gen(batches):
-        import numpy as np
-
-        from parquet_editor_spark.sources.bmp import encode_bmp
-        from parquet_editor_spark.sources.gif import encode_gif
-        from parquet_editor_spark.sources.jpeg_codec import (
-            encode_jpeg_baseline,
-        )
-        from parquet_editor_spark.sources.png import encode_png
-
-        qt = (
-            np.full(64, 8, dtype=np.int64),
-            np.full(64, 8, dtype=np.int64),
-        )
         for pdf in batches:
             pdf = pdf.copy()
             payloads, codecs = [], []
             for raw in pdf["doc_id"]:
                 i = int(raw)
-                w = 8 + i % 60
-                h = 8 + (i * 3) % 40
-                v = (i * 29) % 256
-                pix = bytes([v]) * (w * h)
-                k = i % 4
-                if k == 0:
-                    payloads.append(encode_png(w, h, 1, pix))
-                    codecs.append("png")
-                elif k == 1:
-                    payloads.append(
-                        encode_jpeg_baseline(w, h, 1, pix, quant_tables=qt)
+                codec = ("png", "jpeg", "gif", "bmp")[i % 4]
+                payloads.append(
+                    _constant_image(
+                        codec, 8 + i % 60, 8 + (i * 3) % 40, (i * 29) % 256
                     )
-                    codecs.append("jpeg")
-                elif k == 2:
-                    payloads.append(encode_gif(w, h, 1, pix))
-                    codecs.append("gif")
-                else:
-                    payloads.append(encode_bmp(w, h, 1, pix))
-                    codecs.append("bmp")
+                )
+                codecs.append(codec)
             pdf["payload"] = payloads
             pdf["codec"] = codecs
             yield pdf[["doc_id", "text_len", "payload", "codec"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    fixtures = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = MM.attach_payload(
+        fixtures, "payload", "image", F.col("codec")
     )
     stats = MM.image_pixel_stats(with_payload)
     # brightness is exact for constant frames: px_sum / n_px == v
@@ -2256,25 +2047,13 @@ def q_multimodal_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def gen(batches):
-        import numpy as np
-
-        from parquet_editor_spark.sources.bmp import encode_bmp
-        from parquet_editor_spark.sources.gif import encode_gif
-        from parquet_editor_spark.sources.jpeg_codec import (
-            encode_jpeg_baseline,
-        )
-        from parquet_editor_spark.sources.png import encode_png
-        from parquet_editor_spark.sources.tiff import encode_tiff
         from parquet_editor_spark.sources.webp import (
             make_webp_extended,
             make_webp_lossless,
             make_webp_lossy,
         )
 
-        qt = (
-            np.full(64, 8, dtype=np.int64),
-            np.full(64, 8, dtype=np.int64),
-        )
+        webp = (make_webp_lossy, make_webp_lossless, make_webp_extended)
         for pdf in batches:
             pdf = pdf.copy()
             payloads, codecs = [], []
@@ -2282,49 +2061,20 @@ def q_multimodal_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 i = int(raw)
                 w = 8 + (i * 7) % 120
                 h = 8 + (i * 11) % 120
-                v = (i * 31) % 256
-                pix = bytes([v]) * (w * h)
-                k = i % 6
-                if k == 0:
-                    payloads.append(encode_png(w, h, 1, pix))
-                    codecs.append("png")
-                elif k == 1:
-                    payloads.append(
-                        encode_jpeg_baseline(w, h, 1, pix, quant_tables=qt)
-                    )
-                    codecs.append("jpeg")
-                elif k == 2:
-                    payloads.append(encode_gif(w, h, 1, pix))
-                    codecs.append("gif")
-                elif k == 3:
-                    payloads.append(encode_bmp(w, h, 1, pix))
-                    codecs.append("bmp")
-                elif k == 4:
-                    payloads.append(
-                        encode_tiff(w, h, 1, pix, compression=5)
-                    )
-                    codecs.append("tiff")
-                else:
-                    sub = (i // 6) % 3
-                    if sub == 0:
-                        payloads.append(make_webp_lossy(w, h))
-                    elif sub == 1:
-                        payloads.append(make_webp_lossless(w, h))
-                    else:
-                        payloads.append(make_webp_extended(w, h))
-                    codecs.append("webp")
+                codec = ("png", "jpeg", "gif", "bmp", "tiff", "webp")[i % 6]
+                payloads.append(
+                    webp[(i // 6) % 3](w, h)
+                    if codec == "webp"
+                    else _constant_image(codec, w, h, (i * 31) % 256)
+                )
+                codecs.append(codec)
             pdf["payload"] = payloads
             pdf["codec"] = codecs
             yield pdf[["doc_id", "text_len", "payload", "codec"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    fixtures = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = MM.attach_payload(
+        fixtures, "payload", "image", F.col("codec")
     )
     metas = MM.decode_meta(with_payload)
     keep = (
@@ -2435,14 +2185,9 @@ def q_audio_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["codec"] = codecs
             yield pdf[["doc_id", "text_len", "payload", "codec"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    fixtures = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = MM.attach_payload(
+        fixtures, "payload", "audio", F.col("codec")
     )
     metaed = MM.audio_meta(with_payload)
     return (
@@ -2493,53 +2238,29 @@ def q_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 31 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int) -> bytes:
         import numpy as np
 
         from parquet_editor_spark.sources.flac_codec import encode_flac
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                ch = 1 + i % 2
-                rate = 8000 + (i % 5) * 8000
-                n = 256 * (1 + i % 8)
-                phase = i % 256
-                d = i % 100 - 50
-                t = np.arange(n * ch, dtype=np.int64)
-                sig = (((t + phase) % 256) * 256 - 32640 + d).reshape(
-                    n, ch
-                )
-                payloads.append(
-                    encode_flac(
-                        rate,
-                        ch,
-                        16,
-                        sig,
-                        block_size=1024,
-                        stereo="mid-side" if ch == 2 else "independent",
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        ch = 1 + i % 2
+        rate = 8000 + (i % 5) * 8000
+        n = 256 * (1 + i % 8)
+        phase = i % 256
+        d = i % 100 - 50
+        t = np.arange(n * ch, dtype=np.int64)
+        sig = (((t + phase) % 256) * 256 - 32640 + d).reshape(n, ch)
+        return encode_flac(
+            rate,
+            ch,
+            16,
+            sig,
+            block_size=1024,
+            stereo="mid-side" if ch == 2 else "independent",
+        )
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("flac").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "audio", "flac"
     )
     metaed = MM.audio_meta(with_payload)
 
@@ -2599,7 +2320,6 @@ def q_mp4_frame_index_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``mapInPandas`` (row expansion inside the executor); the only
     shuffle is the per-doc window for the relative offset — bounded
     by the final result size."""
-    from pyspark.sql import types as T
     from pyspark.sql.window import Window
 
     from parquet_editor_spark.operators import multimodal as MM
@@ -2610,48 +2330,21 @@ def q_mp4_frame_index_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 23 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    def make(i: int) -> bytes:
+        from parquet_editor_spark.sources.mp4 import make_mp4_with_samples
 
-    def gen(batches):
-        from parquet_editor_spark.sources.mp4 import (
-            make_mp4_with_samples,
+        n = 5 + i % 20
+        return make_mp4_with_samples(
+            600 + (i % 3) * 200,
+            deltas=[30 + ((i + j) % 3) for j in range(n)],
+            sizes=[100 + ((i + 7 * j) % 50) for j in range(n)],
+            sync=[j + 1 for j in range(n) if j % 5 == 0],
+            ctts_offsets=[(j % 4) * 10 for j in range(n)],
+            samples_per_chunk=4,
         )
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                n = 5 + i % 20
-                ts = 600 + (i % 3) * 200
-                payloads.append(
-                    make_mp4_with_samples(
-                        ts,
-                        deltas=[30 + ((i + j) % 3) for j in range(n)],
-                        sizes=[
-                            100 + ((i + 7 * j) % 50) for j in range(n)
-                        ],
-                        sync=[j + 1 for j in range(n) if j % 5 == 0],
-                        ctts_offsets=[(j % 4) * 10 for j in range(n)],
-                        samples_per_chunk=4,
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
-
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.lit("mp4").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "video", "mp4"
     )
     indexed = MM.video_frame_index(with_payload)
     w = Window.partitionBy("doc_id")
@@ -2740,14 +2433,9 @@ def q_ogg_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["codec"] = codecs
             yield pdf[["doc_id", "payload", "codec"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    fixtures = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = MM.attach_payload(
+        fixtures, "payload", "audio", F.col("codec")
     )
     return (
         MM.audio_meta(with_payload)
@@ -2781,8 +2469,6 @@ def q_image_dedup_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: hashing is an Arrow projection (bytes stay on
     executors); the pair join shuffles only (id, hash, block_key)
     triples — the image-corpus analogue of the MinHash-LSH shape."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import dedup as DD
     from parquet_editor_spark.operators import multimodal as MM
 
@@ -2792,61 +2478,11 @@ def q_image_dedup_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 37 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    def make(i: int) -> bytes:
+        return _dhash_png(i, 74)
 
-    def gen(batches):
-        import numpy as np
-
-        from parquet_editor_spark.sources.png import encode_png
-
-        M = (1 << 64) - 1
-
-        def mix(x: int) -> int:
-            x = (x + 0x9E3779B97F4A7C15) & M
-            x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & M
-            x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & M
-            return x ^ (x >> 31)
-
-        def grid(bits64: int) -> bytes:
-            rows = []
-            for r in range(8):
-                v = 128
-                rows.append(v)
-                for c in range(8):
-                    bit = (bits64 >> (63 - (r * 8 + c))) & 1
-                    v = v + 8 if bit else v - 8
-                    rows.append(v)
-            return bytes(rows)
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                gray = grid(mix(i // 74))
-                if (i // 37) % 2 == 0:
-                    payloads.append(encode_png(9, 8, 1, gray))
-                else:
-                    rgb = bytes(
-                        np.repeat(np.frombuffer(gray, np.uint8), 3)
-                    )
-                    payloads.append(encode_png(9, 8, 3, rgb))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
-
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("png").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "image", "png"
     )
     hashed = MM.image_dhash(with_payload)
     return (
@@ -2888,8 +2524,6 @@ def q_image_dedup_clusters(
     label propagation converges in one round on diameter-1 duplicate
     cliques and every iteration is a (small) pair-table join —
     nothing corpus-sized beyond the id/hash columns moves."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import dedup as DD
     from parquet_editor_spark.operators import multimodal as MM
 
@@ -2899,61 +2533,11 @@ def q_image_dedup_clusters(
         .filter(F.col("doc_id") % 37 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    def make(i: int) -> bytes:
+        return _dhash_png(i, 148)
 
-    def gen(batches):
-        import numpy as np
-
-        from parquet_editor_spark.sources.png import encode_png
-
-        M = (1 << 64) - 1
-
-        def mix(x: int) -> int:
-            x = (x + 0x9E3779B97F4A7C15) & M
-            x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & M
-            x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & M
-            return x ^ (x >> 31)
-
-        def grid(bits64: int) -> bytes:
-            rows = []
-            for r in range(8):
-                v = 128
-                rows.append(v)
-                for c in range(8):
-                    bit = (bits64 >> (63 - (r * 8 + c))) & 1
-                    v = v + 8 if bit else v - 8
-                    rows.append(v)
-            return bytes(rows)
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                gray = grid(mix(i // 148))
-                if (i // 37) % 2 == 0:
-                    payloads.append(encode_png(9, 8, 1, gray))
-                else:
-                    rgb = bytes(
-                        np.repeat(np.frombuffer(gray, np.uint8), 3)
-                    )
-                    payloads.append(encode_png(9, 8, 3, rgb))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
-
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("png").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "image", "png"
     )
     hashed = MM.image_dhash(with_payload)
     pairs = DD.hamming_pairs(hashed, "doc_id", "dhash", max_hamming=3)
@@ -3137,14 +2721,9 @@ def q_audio_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["codec"] = codecs
             yield pdf[["doc_id", "payload", "codec"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    fixtures = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = MM.attach_payload(
+        fixtures, "payload", "audio", F.col("codec")
     )
     return (
         MM.audio_stats(with_payload)
@@ -3174,8 +2753,6 @@ def q_tiff_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     256-pixel row sums to 32640 per channel.  Runs the production
     ``image_pixel_stats`` stage (Arrow, executor-side), same shape as
     the r9 GIF/BMP query."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3184,52 +2761,28 @@ def q_tiff_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 39 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int) -> bytes:
         from parquet_editor_spark.sources.tiff import encode_tiff
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                h = 3 + i % 11
-                ch = 3 if i % 5 == 0 else 1
-                row = bytes((x + i) % 256 for x in range(256))
-                if ch == 3:
-                    pix = b"".join(
-                        bytes([v, v, v]) for v in row
-                    ) * h
-                else:
-                    pix = row * h
-                payloads.append(
-                    encode_tiff(
-                        256,
-                        h,
-                        ch,
-                        pix,
-                        compression=[1, 32773, 5][i % 3],
-                        rows_per_strip=4,
-                        big_endian=i % 2 == 1,
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        h = 3 + i % 11
+        ch = 3 if i % 5 == 0 else 1
+        row = bytes((x + i) % 256 for x in range(256))
+        if ch == 3:
+            pix = b"".join(bytes([v, v, v]) for v in row) * h
+        else:
+            pix = row * h
+        return encode_tiff(
+            256,
+            h,
+            ch,
+            pix,
+            compression=[1, 32773, 5][i % 3],
+            rows_per_strip=4,
+            big_endian=i % 2 == 1,
+        )
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("tiff").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "image", "tiff"
     )
     return (
         MM.image_pixel_stats(with_payload)
@@ -3257,8 +2810,6 @@ def q_avi_mjpeg_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: generation and decode are Arrow ``mapInPandas`` (row
     expansion inside the executor, ≤3 rows per clip); payload bytes
     never shuffle — only scalar stats reach the sort."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3267,55 +2818,19 @@ def q_avi_mjpeg_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 33 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
-        import numpy as np
-
+    def make(i: int) -> bytes:
         from parquet_editor_spark.sources.avi import encode_avi_mjpeg
-        from parquet_editor_spark.sources.jpeg_codec import (
-            encode_jpeg_baseline,
-        )
 
-        qt = (
-            np.full(64, 8, dtype=np.int64),
-            np.full(64, 8, dtype=np.int64),
-        )
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                w = 12 + i % 49
-                h = 10 + (i * 3) % 37
-                n = 2 + i % 4
-                frames = [
-                    encode_jpeg_baseline(
-                        w,
-                        h,
-                        1,
-                        bytes([(i * 13 + j * 71) % 256]) * (w * h),
-                        quant_tables=qt,
-                    )
-                    for j in range(n)
-                ]
-                payloads.append(encode_avi_mjpeg(w, h, (30, 1), frames))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        w = 12 + i % 49
+        h = 10 + (i * 3) % 37
+        frames = [
+            _constant_image("jpeg", w, h, (i * 13 + j * 71) % 256)
+            for j in range(2 + i % 4)
+        ]
+        return encode_avi_mjpeg(w, h, (30, 1), frames)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.lit("avi").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "video", "avi"
     )
     return (
         MM.video_frame_stats(with_payload, k=3)
@@ -3361,18 +2876,6 @@ def q_video_scene_cuts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def gen(batches):
-        import numpy as np
-
-        from parquet_editor_spark.sources.avi import encode_avi_mjpeg
-        from parquet_editor_spark.sources.jpeg_codec import (
-            encode_jpeg_baseline,
-        )
-        from parquet_editor_spark.sources.y4m import encode_y4m
-
-        qt = (
-            np.full(64, 8, dtype=np.int64),
-            np.full(64, 8, dtype=np.int64),
-        )
         for pdf in batches:
             pdf = pdf.copy()
             payloads, codecs = [], []
@@ -3385,41 +2888,16 @@ def q_video_scene_cuts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 a = (i * 19) % 256
                 b = (i * 19 + 97) % 256
                 vals = [a if j < m else b for j in range(n)]
-                if i % 2 == 0:
-                    fb = w * h * 3 // 2
-                    payloads.append(
-                        encode_y4m(
-                            w, h, (25, 1),
-                            [bytes([v]) * fb for v in vals],
-                        )
-                    )
-                    codecs.append("y4m")
-                else:
-                    payloads.append(
-                        encode_avi_mjpeg(
-                            w, h, (25, 1),
-                            [
-                                encode_jpeg_baseline(
-                                    w, h, 1, bytes([v]) * (w * h),
-                                    quant_tables=qt,
-                                )
-                                for v in vals
-                            ],
-                        )
-                    )
-                    codecs.append("avi")
+                codec = "y4m" if i % 2 == 0 else "avi"
+                payloads.append(_constant_clip(codec, w, h, vals))
+                codecs.append(codec)
             pdf["payload"] = payloads
             pdf["codec"] = codecs
             yield pdf[["doc_id", "codec", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    fixtures = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = MM.attach_payload(
+        fixtures, "payload", "video", F.col("codec")
     )
     return (
         MM.video_scene_cuts(with_payload, threshold=16)
@@ -3443,8 +2921,6 @@ def q_jpeg_exif_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the executors.  Every fourth doc omits the APP1 entirely,
     pinning the all-None missing-metadata path.  All fields are
     closed-form arithmetic/format on doc_id."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3453,53 +2929,30 @@ def q_jpeg_exif_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 51 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int) -> bytes:
         from parquet_editor_spark.sources.exif import (
             insert_app1,
             make_exif_app1,
         )
         from parquet_editor_spark.sources.jpeg import make_jpeg_header
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                base = make_jpeg_header(32 + i % 64, 24 + i % 48, 3)
-                if i % 4 == 0:
-                    payloads.append(base)  # no EXIF: all-None row
-                    continue
-                app1 = make_exif_app1(
-                    make=f"Maker{i % 7}",
-                    model=f"Cam-{i % 13}",
-                    orientation=1 + i % 8,
-                    datetime=(
-                        f"2024:{1 + i % 12:02d}:{1 + i % 28:02d} 10:30:00"
-                    ),
-                    exif_w=640 + i % 1280,
-                    exif_h=480 + i % 960,
-                    iso=100 * (1 + i % 32),
-                    big_endian=i % 2 == 1,
-                )
-                payloads.append(insert_app1(base, app1))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        base = make_jpeg_header(32 + i % 64, 24 + i % 48, 3)
+        if i % 4 == 0:
+            return base  # no EXIF: all-None row
+        app1 = make_exif_app1(
+            make=f"Maker{i % 7}",
+            model=f"Cam-{i % 13}",
+            orientation=1 + i % 8,
+            datetime=f"2024:{1 + i % 12:02d}:{1 + i % 28:02d} 10:30:00",
+            exif_w=640 + i % 1280,
+            exif_h=480 + i % 960,
+            iso=100 * (1 + i % 32),
+            big_endian=i % 2 == 1,
+        )
+        return insert_app1(base, app1)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("jpeg").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "image", "jpeg"
     )
     return (
         MM.image_exif(with_payload)
@@ -3553,18 +3006,6 @@ def q_video_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def gen(batches):
-        import numpy as np
-
-        from parquet_editor_spark.sources.avi import encode_avi_mjpeg
-        from parquet_editor_spark.sources.jpeg_codec import (
-            encode_jpeg_baseline,
-        )
-        from parquet_editor_spark.sources.y4m import encode_y4m
-
-        qt = (
-            np.full(64, 8, dtype=np.int64),
-            np.full(64, 8, dtype=np.int64),
-        )
         for pdf in batches:
             pdf = pdf.copy()
             payloads, codecs = [], []
@@ -3582,41 +3023,16 @@ def q_video_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
                 else:
                     m = 1 + i % max(n - 1, 1)
                     vals = [a if j < m else b for j in range(n)]
-                if i % 2 == 0:
-                    fb = w * h * 3 // 2
-                    payloads.append(
-                        encode_y4m(
-                            w, h, (25, 1),
-                            [bytes([v]) * fb for v in vals],
-                        )
-                    )
-                    codecs.append("y4m")
-                else:
-                    payloads.append(
-                        encode_avi_mjpeg(
-                            w, h, (25, 1),
-                            [
-                                encode_jpeg_baseline(
-                                    w, h, 1, bytes([v]) * (w * h),
-                                    quant_tables=qt,
-                                )
-                                for v in vals
-                            ],
-                        )
-                    )
-                    codecs.append("avi")
+                codec = "y4m" if i % 2 == 0 else "avi"
+                payloads.append(_constant_clip(codec, w, h, vals))
+                codecs.append(codec)
             pdf["payload"] = payloads
             pdf["codec"] = codecs
             yield pdf[["doc_id", "codec", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    fixtures = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = MM.attach_payload(
+        fixtures, "payload", "video", F.col("codec")
     )
     meta = MM.video_meta(with_payload).select(
         "doc_id", "codec", "duration_ms"
@@ -3855,14 +3271,9 @@ def q_subtitle_cues_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["fmt"] = fmts
             yield pdf[["doc_id", "fmt", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("text").alias("media_type"),
-            F.col("fmt").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    fixtures = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = MM.attach_payload(
+        fixtures, "payload", "text", F.col("fmt")
     )
     return (
         MM.subtitle_cues(with_payload)
@@ -11252,8 +10663,6 @@ def q_png_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec defect fails the row loudly.  The oracle recomputes every
     column arithmetically from doc_id, so the differential checks the
     whole Spark-side codec path against closed-form truth."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -11262,52 +10671,29 @@ def q_png_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 17 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int) -> bytes:
         from parquet_editor_spark.sources.png import encode_png
 
-        for pdf in batches:
-            ids = list(pdf["doc_id"])
-            pdf = pdf.copy()
-            payloads = []
-            for i in ids:
-                # r6: cycle the stored depth through 8/16/1/2/4 so the
-                # fixture exercises every decode path the codec claims;
-                # sub-byte depths are grayscale-only per the spec, and
-                # decode_png's 8-bit view reports channels=1 for them
-                w, h = 3 + i % 13, 2 + i % 11
-                depth = (8, 16, 1, 2, 4)[i % 5]
-                if depth in (1, 2, 4):
-                    ch = 1
-                    maxv = (1 << depth) - 1
-                    px = bytes(
-                        (i * 31 + j * 7) % (maxv + 1) for j in range(w * h)
-                    )
-                else:
-                    ch = 1 + i % 4
-                    px = bytes(
-                        (i * 31 + j * 7) % 256
-                        for j in range(w * h * ch * (depth // 8))
-                    )
-                payloads.append(encode_png(w, h, ch, px, depth=depth))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        # r6: cycle the stored depth through 8/16/1/2/4 so the
+        # fixture exercises every decode path the codec claims;
+        # sub-byte depths are grayscale-only per the spec, and
+        # decode_png's 8-bit view reports channels=1 for them
+        w, h = 3 + i % 13, 2 + i % 11
+        depth = (8, 16, 1, 2, 4)[i % 5]
+        if depth in (1, 2, 4):
+            ch = 1
+            maxv = (1 << depth) - 1
+            px = bytes((i * 31 + j * 7) % (maxv + 1) for j in range(w * h))
+        else:
+            ch = 1 + i % 4
+            px = bytes(
+                (i * 31 + j * 7) % 256
+                for j in range(w * h * ch * (depth // 8))
+            )
+        return encode_png(w, h, ch, px, depth=depth)
 
-    payloads = docs.mapInPandas(gen, schema=gen_schema)
-    tagged = payloads.withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("png").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    tagged = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "image", "png"
     )
     orig = MM.decode_meta(tagged).select(
         "doc_id",
@@ -11341,8 +10727,6 @@ def q_wav_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes every emitted column arithmetically from
     doc_id (integer floor division both sides), so the differential
     checks the whole codec path against closed-form truth."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -11351,45 +10735,26 @@ def q_wav_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 19 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    def make(i: int) -> bytes:
+        from parquet_editor_spark.sources.wav import (
+            IEEE_FLOAT,
+            PCM,
+            encode_wav,
+        )
 
-    def gen(batches):
-        from parquet_editor_spark.sources.wav import IEEE_FLOAT, PCM, encode_wav
+        rate = 8000 + (i % 5) * 2000
+        ch = 1 + i % 2
+        n = 50 + i % 97
+        # r6: cycle the sample format through float32 / PCM16 /
+        # PCM24 so the fixture exercises the IEEE-float path
+        # (frames are opaque blocks either way — the format tag
+        # must survive the resample's re-encode)
+        bits, tag = ((32, IEEE_FLOAT), (16, PCM), (24, PCM))[i % 3]
+        pcm = bytes((i * 13 + j * 7) % 256 for j in range(n * ch * bits // 8))
+        return encode_wav(rate, ch, bits, pcm, fmt_tag=tag)
 
-        for pdf in batches:
-            ids = list(pdf["doc_id"])
-            out = pdf.copy()
-            payloads = []
-            for i in ids:
-                rate = 8000 + (i % 5) * 2000
-                ch = 1 + i % 2
-                n = 50 + i % 97
-                # r6: cycle the sample format through float32 / PCM16 /
-                # PCM24 so the fixture exercises the IEEE-float path
-                # (frames are opaque blocks either way — the format tag
-                # must survive the resample's re-encode)
-                bits, tag = ((32, IEEE_FLOAT), (16, PCM), (24, PCM))[i % 3]
-                pcm = bytes(
-                    (i * 13 + j * 7) % 256 for j in range(n * ch * bits // 8)
-                )
-                payloads.append(encode_wav(rate, ch, bits, pcm, fmt_tag=tag))
-            out["payload"] = payloads
-            yield out[["doc_id", "payload"]]
-
-    payloads = docs.mapInPandas(gen, schema=gen_schema)
-    tagged = payloads.withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("wav").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    tagged = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "audio", "wav"
     )
     orig = MM.audio_meta(tagged).select(
         "doc_id",
@@ -11424,8 +10789,6 @@ def q_y4m_frames_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse + frame walk; the oracle recomputes them arithmetically
     (frame checksums are additionally pinned by pytest against real
     frame bytes — md5 of generated YUV is not SQL-expressible)."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -11434,42 +10797,20 @@ def q_y4m_frames_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 23 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int) -> bytes:
         from parquet_editor_spark.sources.y4m import encode_y4m
 
-        for pdf in batches:
-            ids = list(pdf["doc_id"])
-            out = pdf.copy()
-            payloads = []
-            for i in ids:
-                w = 2 * (1 + i % 5)
-                h = 2 * (1 + i % 3)
-                n = 3 + i % 7
-                fb = w * h * 3 // 2
-                frames = [
-                    bytes((i * 17 + f * 5 + j) % 256 for j in range(fb))
-                    for f in range(n)
-                ]
-                payloads.append(encode_y4m(w, h, (30, 1), frames))
-            out["payload"] = payloads
-            yield out[["doc_id", "payload"]]
+        w = 2 * (1 + i % 5)
+        h = 2 * (1 + i % 3)
+        fb = w * h * 3 // 2
+        frames = [
+            bytes((i * 17 + f * 5 + j) % 256 for j in range(fb))
+            for f in range(3 + i % 7)
+        ]
+        return encode_y4m(w, h, (30, 1), frames)
 
-    payloads = docs.mapInPandas(gen, schema=gen_schema)
-    tagged = payloads.withColumn(
-        "meta",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.lit("y4m").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    tagged = MM.attach_payload(
+        _doc_payloads(docs, make), "payload", "video", "y4m"
     )
     return (
         MM.sample_frames_video(tagged, k=3)

@@ -23,20 +23,27 @@ paths, dispatched per row on ``meta.codec``:
   format: exercises the real Spark plumbing (binary Arrow transfer,
   batch iteration, array-column schemas, explode for frame sampling)
   without pretending to decode pixels.
-- anything else — a clearly-marked ``NotImplementedError``; swapping
-  in PIL/ffmpeg later changes ONLY ``_decode_real``.
+- anything else — a clearly-marked ``NotImplementedError``.
 
-Worker-side note: the PNG path imports ``parquet_editor_spark`` inside
-the UDF, so the package must be shipped to executors (``--py-files`` /
-pex / cluster image) — the standard requirement for any real codec
-dependency, and automatic in local mode.
+Each decode tier has ONE dispatch that every operator of that tier
+calls: ``_decode_real`` (+ ``_decode_fake``) for image dimensions
+(``decode_meta``), ``_decode_pixels`` for pixel-level image stages,
+and ``_decode_audio_samples`` — the one audio sample decoder — for
+sample-level audio stages (``audio_stats``, ``audio_segments``).
+Swapping in PIL/ffmpeg for dimensions later changes ONLY
+``_decode_real``.
+
+Worker-side note: the UDFs call these module-level dispatches (and the
+codecs import ``parquet_editor_spark``), so the package must be shipped
+to executors (``--py-files`` / pex / cluster image) — the standard
+requirement for any real codec dependency, and automatic in local mode.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -52,14 +59,20 @@ MEDIA_META_SCHEMA = T.StructType(
 
 
 def attach_payload(
-    df: DataFrame, source_col: str, media_type: str = "image", codec: str = "fake"
+    df: DataFrame,
+    source_col: str,
+    media_type: str = "image",
+    codec: str | Column = "fake",
 ) -> DataFrame:
     """Wrap a source column's bytes as an opaque media payload +
-    typed metadata. A string source is UTF-8 encoded; an
-    already-binary source (e.g. the ``binaryFile`` scan's ``content``)
-    passes through untouched. ``encode`` is a JVM expression; the
-    checksum is md5 over the payload bytes (portable: Spark, DuckDB,
-    hashlib all agree)."""
+    typed metadata — the ONE place the ``MEDIA_META_SCHEMA`` struct
+    is assembled. A string source is UTF-8 encoded; an already-binary
+    source (e.g. the ``binaryFile`` scan's ``content``) passes through
+    untouched. ``codec`` is a literal for a single-codec frame or a
+    Column (e.g. ``F.col("codec")``) when the codec varies per row;
+    ``meta.codec`` then follows each row. ``encode`` is a JVM
+    expression; the checksum is md5 over the payload bytes (portable:
+    Spark, DuckDB, hashlib all agree)."""
     already_binary = isinstance(
         df.schema[source_col].dataType, T.BinaryType
     )
@@ -80,8 +93,8 @@ def attach_payload(
 
 
 def _decode_real(payload: bytes, codec: str):
-    """The real decoder seam: dimensions per codec, mirroring
-    ``decode_meta``'s per-row dispatch.  Formats without a
+    """The real decoder seam: dimensions per codec — ``decode_meta``
+    calls it for every non-fake row.  Formats without a
     dependency-free decoder fail loudly rather than fabricating
     pixels."""
     if codec == "png":
@@ -137,9 +150,10 @@ def decode_meta(
     never need entropy decode; the pixel-level stages run the full
     codec); ``"gif"`` rows use the frame walk (``gif_meta`` — no LZW
     work for dimensions) and ``"bmp"`` the O(1) header read (r9);
-    ``"fake"`` rows use the deterministic fake; other codecs raise
-    (failing the task, not fabricating pixels).  A frame without
-    ``meta`` decodes as fake."""
+    ``"fake"`` rows use the deterministic fake (``_decode_fake``);
+    every other row goes through ``_decode_real``, so other codecs
+    raise (failing the task, not fabricating pixels).  A frame
+    without ``meta`` decodes as fake."""
     has_meta = meta_col in df.columns
     out_schema = T.StructType(
         list(df.schema.fields)
@@ -151,53 +165,6 @@ def decode_meta(
     )
 
     def run(batches):
-        # the fake path stays self-contained (nested defs ship by
-        # value); the png path imports the package on the worker —
-        # ship it via --py-files/pex in a cluster deployment
-        import hashlib as _h
-
-        def fake(p: bytes):
-            d = _h.md5(p).digest()
-            return 16 + d[0] % 1024, 16 + d[1] % 1024, 1 + d[2] % 4
-
-        def dims_of(p, codec: str):
-            if p is None:
-                return (None, None, None)
-            p = bytes(p)
-            if codec == "png":
-                from parquet_editor_spark.sources.png import decode_png
-
-                w, h, ch, _ = decode_png(p)
-                return (w, h, ch)
-            if codec in ("jpeg", "jpg"):
-                from parquet_editor_spark.sources.jpeg import (
-                    jpeg_header_meta,
-                )
-
-                return jpeg_header_meta(p)
-            if codec == "gif":
-                from parquet_editor_spark.sources.gif import gif_meta
-
-                w, h, _frames = gif_meta(p)
-                return (w, h, 3)
-            if codec == "bmp":
-                from parquet_editor_spark.sources.bmp import bmp_meta
-
-                return bmp_meta(p)
-            if codec in ("tiff", "tif"):
-                from parquet_editor_spark.sources.tiff import tiff_meta
-
-                return tiff_meta(p)
-            if codec == "webp":
-                from parquet_editor_spark.sources.webp import webp_meta
-
-                return webp_meta(p)
-            if codec == "fake":
-                return fake(p)
-            raise NotImplementedError(
-                f"decode for codec {codec!r} requires PIL/ffmpeg"
-            )
-
         for pdf in batches:
             codecs = (
                 [
@@ -208,7 +175,12 @@ def decode_meta(
                 else ["fake"] * len(pdf)
             )
             dims = [
-                dims_of(p, c) for p, c in zip(pdf[payload_col], codecs)
+                (None, None, None)
+                if p is None
+                else _decode_fake(bytes(p))
+                if c == "fake"
+                else _decode_real(bytes(p), c)
+                for p, c in zip(pdf[payload_col], codecs)
             ]
             pdf = pdf.copy()
             pdf["width"] = [d[0] for d in dims]
@@ -2397,9 +2369,9 @@ def video_scene_cuts(
 
 def _decode_audio_samples(p: bytes, codec: str):
     """(rate, ch, samples) with samples shaped (n, ch) int64 — the
-    shared lossless decode dispatch for sample-level audio operators
-    (WAV PCM/ADPCM/G.711 via sources/wav.py, FLAC via the pure-numpy
-    codec; IEEE-float WAV and other codecs gate loudly)."""
+    ONE audio sample decoder: ``audio_stats`` and ``audio_segments``
+    both call it (WAV PCM/ADPCM/G.711 via sources/wav.py, FLAC via
+    the pure-numpy codec; IEEE-float WAV and other codecs gate)."""
     import numpy as _np
 
     if codec == "wav":
@@ -2544,8 +2516,9 @@ def audio_stats(
     """Sample-level audio statistics: payload → (sample_rate,
     channels, n_frames, peak, dc_sum, sq_sum, zero_crossings) — the
     integer-exact inputs an audio-curation pipeline filters on
-    (silence, clipping, DC offset, noisiness).  ``"wav"`` rows decode
-    through the full PCM/ADPCM/G.711 tier (``sources/wav.py``;
+    (silence, clipping, DC offset, noisiness).  Real rows decode
+    through ``_decode_audio_samples``: ``"wav"`` rows through the
+    full PCM/ADPCM/G.711 tier (``sources/wav.py``;
     unsigned 8-bit is centered at −128, IEEE-float WAVs raise — float
     stats aren't engine-portable); ``"flac"`` rows decode through the
     pure-numpy FLAC codec (``sources/flac_codec.py``, r9); ``"fake"``
@@ -2577,55 +2550,6 @@ def audio_stats(
 
         import numpy as _np
 
-        def samples_of(p: bytes, codec: str):
-            """(rate, ch, samples) with samples shaped (n, ch) int64."""
-            if codec == "wav":
-                from parquet_editor_spark.sources import wav as _wav
-
-                rate, ch, bits, n, frames, tag = _wav.decode_wav_ex(p)
-                if tag == _wav.IEEE_FLOAT:
-                    raise NotImplementedError(
-                        "audio stats for IEEE-float WAV are not "
-                        "engine-portable; convert to PCM first"
-                    )
-                if bits == 8:
-                    a = (
-                        _np.frombuffer(frames, _np.uint8).astype(
-                            _np.int64
-                        )
-                        - 128
-                    )
-                elif bits == 16:
-                    a = _np.frombuffer(frames, "<i2").astype(_np.int64)
-                elif bits == 32:
-                    a = _np.frombuffer(frames, "<i4").astype(_np.int64)
-                elif bits == 24:
-                    raw = _np.frombuffer(frames, _np.uint8).reshape(
-                        -1, 3
-                    )
-                    u = (
-                        raw[:, 0].astype(_np.int64)
-                        | (raw[:, 1].astype(_np.int64) << 8)
-                        | (raw[:, 2].astype(_np.int64) << 16)
-                    )
-                    a = _np.where(u >= 1 << 23, u - (1 << 24), u)
-                else:
-                    raise NotImplementedError(
-                        f"audio stats for {bits}-bit WAV"
-                    )
-                return rate, ch, a.reshape(n, ch)
-            if codec == "flac":
-                from parquet_editor_spark.sources.flac_codec import (
-                    decode_flac,
-                )
-
-                rate, ch, _bits, _n, s = decode_flac(p)
-                return rate, ch, s
-            raise NotImplementedError(
-                f"audio stats for codec {codec!r} requires a real "
-                "audio library"
-            )
-
         def stats_of(p, codec: str):
             if p is None:
                 return (None,) * 7
@@ -2638,7 +2562,7 @@ def audio_stats(
                 v = d[5] % 128
                 return (rate, ch, n, v, v * n * ch,
                         v * v * n * ch, 0)
-            rate, ch, s = samples_of(p, codec)
+            rate, ch, s = _decode_audio_samples(p, codec)
             n = len(s)
             if n == 0:
                 return (rate, ch, 0, 0, 0, 0, 0)

@@ -45,6 +45,55 @@ def test_top_level_functions_unique():
     assert not dupes, f"shadowed function definitions: {dupes}"
 
 
+def test_media_meta_built_only_by_attach_payload():
+    """The media ``meta`` struct (``multimodal.MEDIA_META_SCHEMA``) has
+    ONE constructor, ``multimodal.attach_payload``: no function here may
+    assemble it by hand — an ``.alias("checksum")`` or
+    ``.alias("media_type")`` call is the tell."""
+    tree = ast.parse(ENTRY.read_text())
+    offenders = [
+        f"{fn.name}:{call.lineno}"
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for call in ast.walk(fn)
+        if isinstance(call, ast.Call)
+        and isinstance(call.func, ast.Attribute)
+        and call.func.attr == "alias"
+        and call.args
+        and isinstance(call.args[0], ast.Constant)
+        and call.args[0].value in ("checksum", "media_type")
+    ]
+    assert not offenders, f"hand-built media meta: {offenders}"
+
+
+def test_fixture_helpers_ship_by_value(spark):
+    """UDF bodies call module-level fixture helpers (``_constant_image``
+    …); executors must not need to import the entry module for them.
+    Loaded under a module name no worker can import, a fixture stage
+    that calls a helper still runs."""
+    import importlib.util
+    import sys
+
+    from pyspark import cloudpickle
+
+    spec = importlib.util.spec_from_file_location("entry_alias", ENTRY)
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules["entry_alias"] = mod
+    spec.loader.exec_module(mod)
+    try:
+        image = mod._constant_image
+        docs = spark.range(3).withColumnRenamed("id", "doc_id")
+        rows = mod._doc_payloads(
+            docs, lambda i: image("bmp", 2, 2, i)
+        ).collect()
+        assert sorted(bytes(r["payload"]) for r in rows) == sorted(
+            image("bmp", 2, 2, i) for i in range(3)
+        )
+    finally:
+        cloudpickle.unregister_pickle_by_value(mod)
+        del sys.modules["entry_alias"]
+
+
 def test_driver_window_is_exactly_50_and_holds_priority_queries():
     """The driver adjudicates only the FIRST 50 queries() entries per
     round.  Round 2 overflowed the priority block to 59, so 9 queries

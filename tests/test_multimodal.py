@@ -5,6 +5,7 @@ loud NotImplementedError on real codecs."""
 import hashlib
 
 import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from parquet_editor_spark.operators import multimodal as MM
@@ -72,7 +73,7 @@ def test_sample_frames_explodes(payloads):
     assert all(r["n"] == 4 for r in per_doc)
 
 
-def test_real_codec_raises():
+def test_real_codec_raises(spark):
     # r8: jpeg now has a real header-metadata path — garbage bytes are
     # a ValueError (not a JPEG); r9 made webp real too (RIFF header
     # walk), so only genuinely unimplemented codecs raise
@@ -83,6 +84,37 @@ def test_real_codec_raises():
         MM._decode_real(b"bytes", "webp")
     with pytest.raises(NotImplementedError, match="PIL/ffmpeg"):
         MM._decode_real(b"bytes", "heic")
+    # the Spark path decodes through the SAME dispatch: decode_meta
+    # fails a heic row with _decode_real's own message
+    heic = MM.attach_payload(
+        spark.createDataFrame([(1, b"bytes")], "doc_id long, raw binary"),
+        "raw",
+        codec="heic",
+    )
+    with pytest.raises(
+        PythonException, match="not available in this environment"
+    ):
+        MM.decode_meta(heic).collect()
+
+
+def test_attach_payload_per_row_codec_column(spark):
+    """A Column ``codec`` makes ``meta.codec`` follow each row, while
+    ``n_bytes``/``checksum`` still describe that row's own bytes."""
+    rows = [(1, b"\x89PNG a", "png"), (2, b"GIF89a b", "gif"), (3, b"", "bmp")]
+    df = spark.createDataFrame(
+        rows, "doc_id long, payload binary, codec string"
+    )
+    out = MM.attach_payload(df, "payload", "image", F.col("codec"))
+    assert out.schema["meta"].dataType.fieldNames() == (
+        MM.MEDIA_META_SCHEMA.fieldNames()
+    )
+    got = out.select("doc_id", "meta.*").orderBy("doc_id").collect()
+    assert [r["doc_id"] for r in got] == [1, 2, 3]
+    for (_, raw, codec), r in zip(rows, got):
+        assert r["media_type"] == "image"
+        assert r["codec"] == codec
+        assert r["n_bytes"] == len(raw)
+        assert r["checksum"] == hashlib.md5(raw).hexdigest()
 
 
 def test_binary_dir_ingestion_to_payload(spark, tmp_path):
