@@ -1429,11 +1429,14 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _doc_payloads(
-    docs: DataFrame, make: Callable[[int], bytes]
+    docs: DataFrame, make: Callable[..., bytes]
 ) -> DataFrame:
     """One Arrow ``gen`` stage: ``docs`` → ``(doc_id, payload)`` with
-    ``payload = make(doc_id)``, built executor-side.  Every media
-    fixture whose bytes depend only on ``doc_id`` goes through it."""
+    ``payload = make(doc_id, *rest)``, built executor-side, where
+    ``rest`` is the row's values of the other columns of ``docs`` in
+    their column order — none for a doc_id-only frame (``make(i)``),
+    the text for a ``(doc_id, text)`` frame (``make(i, text)``; a null
+    text arrives as ``None``).  Every payload fixture goes through it."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -1446,7 +1449,11 @@ def _doc_payloads(
     def gen(batches):
         for pdf in batches:
             pdf = pdf.copy()
-            pdf["payload"] = [make(int(i)) for i in pdf["doc_id"]]
+            rest = [pdf[c] for c in pdf.columns if c != "doc_id"]
+            pdf["payload"] = [
+                make(int(i), *vals)
+                for i, *vals in zip(pdf["doc_id"], *rest)
+            ]
             yield pdf[["doc_id", "payload"]]
 
     return docs.mapInPandas(gen, schema=schema)
@@ -3086,8 +3093,6 @@ def q_warc_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: build + parse are Arrow ``mapInPandas`` over the
     same partition (archive bytes never shuffle); only the extracted
     scalar rows reach the sort."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3096,45 +3101,28 @@ def q_warc_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 59 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int, text) -> bytes:
         from parquet_editor_spark.sources.warc import make_warc
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                recs = [
-                    {
-                        "warc_type": "warcinfo",
-                        "content_type": "application/warc-fields",
-                        "payload": "software: parquet_editor_spark\r\n",
-                    }
-                ] + [
-                    {
-                        "warc_type": "response",
-                        "target_uri": f"https://example.org/{i}/{j}",
-                        "content_type": "text/plain",
-                        "payload": text or "",
-                    }
-                    for j in range(1, 2 + i % 3)
-                ]
-                payloads.append(
-                    make_warc(recs, gzip_members=i % 2 == 1)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        recs = [
+            {
+                "warc_type": "warcinfo",
+                "content_type": "application/warc-fields",
+                "payload": "software: parquet_editor_spark\r\n",
+            }
+        ] + [
+            {
+                "warc_type": "response",
+                "target_uri": f"https://example.org/{i}/{j}",
+                "content_type": "text/plain",
+                "payload": text or "",
+            }
+            for j in range(1, 2 + i % 3)
+        ]
+        return make_warc(recs, gzip_members=i % 2 == 1)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
     return (
-        MM.warc_records(with_payload)
+        MM.warc_records(_doc_payloads(docs, make))
         .select(
             "doc_id",
             "rec_idx",
@@ -3163,8 +3151,6 @@ def q_zip_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: build + parse are Arrow ``mapInPandas`` in the same
     partition; archive bytes never shuffle."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3173,34 +3159,14 @@ def q_zip_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 61 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int, text) -> bytes:
         from parquet_editor_spark.sources.ziparc import make_zip
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                members = [
-                    (f"docs/{i}/{j}.txt", text or "")
-                    for j in range(2 + i % 3)
-                ]
-                payloads.append(
-                    make_zip(members, compress=i % 2 == 0)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        members = [(f"docs/{i}/{j}.txt", text or "") for j in range(2 + i % 3)]
+        return make_zip(members, compress=i % 2 == 0)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
     return (
-        MM.zip_members(with_payload)
+        MM.zip_members(_doc_payloads(docs, make))
         .select(
             "doc_id",
             "member_idx",
@@ -3290,6 +3256,17 @@ def q_subtitle_cues_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _text_shard_tar(i: int, text) -> bytes:
+    """Doc ``i``'s ustar archive: 2 + i%3 members ``shard/{i}/{j}.txt``
+    each carrying ``text``, mtime = i, gzipped for odd docs — the batch
+    (``tar_extract_docs``) and streaming (``stream_shard_ingest``)
+    archive fixture."""
+    from parquet_editor_spark.sources.tararc import make_tar
+
+    members = [(f"shard/{i}/{j}.txt", text or "") for j in range(2 + i % 3)]
+    return make_tar(members, mtime=i, gzip_compress=i % 2 == 1)
+
+
 def q_tar_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dataset-bundle TAR ingestion (sources/tararc.py, new r9): per
     doc, bundle 2 + doc_id%3 text members — each carrying the doc's
@@ -3305,8 +3282,6 @@ def q_tar_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: build + parse are Arrow ``mapInPandas`` in the same
     partition; archive bytes never shuffle."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3314,35 +3289,8 @@ def q_tar_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .filter(F.col("doc_id") % 67 == 0)
     )
-
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
-        from parquet_editor_spark.sources.tararc import make_tar
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                members = [
-                    (f"shard/{i}/{j}.txt", text or "")
-                    for j in range(2 + i % 3)
-                ]
-                payloads.append(
-                    make_tar(members, mtime=i, gzip_compress=i % 2 == 1)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
-
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
     return (
-        MM.tar_members(with_payload)
+        MM.tar_members(_doc_payloads(docs, _text_shard_tar))
         .select(
             "doc_id",
             "member_idx",
@@ -3368,8 +3316,6 @@ def q_wds_samples_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals are arithmetic on (doc_id, j) + ``documents.text`` — a
     member attributed to the wrong sample or a lost component fails
     closed-form."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3378,38 +3324,21 @@ def q_wds_samples_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 71 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int, text) -> bytes:
         from parquet_editor_spark.sources.tararc import make_tar
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                members = []
-                for j in range(1 + i % 3):
-                    key = f"{i:08d}-{j}"
-                    members += [
-                        (f"{key}.txt", text or ""),
-                        (f"{key}.cls", str(i % 5)),
-                        (f"{key}.json", '{"id": %d}' % (i * 10 + j)),
-                    ]
-                payloads.append(
-                    make_tar(members, gzip_compress=i % 2 == 1)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        members = []
+        for j in range(1 + i % 3):
+            key = f"{i:08d}-{j}"
+            members += [
+                (f"{key}.txt", text or ""),
+                (f"{key}.cls", str(i % 5)),
+                (f"{key}.json", '{"id": %d}' % (i * 10 + j)),
+            ]
+        return make_tar(members, gzip_compress=i % 2 == 1)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
     return (
-        MM.wds_samples(with_payload)
+        MM.wds_samples(_doc_payloads(docs, make))
         .select(
             "doc_id",
             "sample_idx",
@@ -3426,6 +3355,64 @@ def q_wds_samples_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("txt_prefix"),
         )
         .orderBy("doc_id", "sample_idx")
+    )
+
+
+def _warc_curated(
+    spark: SparkSession,
+    sf_dir: str,
+    every: int,
+    uris: Callable[[int], list],
+) -> DataFrame:
+    """The crawl-curation WARC stage: every ``every``-th doc's text,
+    wrapped in deterministic crawl HTML, is archived as one response
+    record per URI of ``uris(doc_id)`` (``.warc.gz`` per-record gzip
+    for odd docs), walked back by ``warc_records``, response-filtered,
+    cleaned by ``strip_markup`` into ``__clean`` and gated at
+    ``quality_score`` ``q`` ≥ 0.6.  Returns doc_id, rec_idx,
+    target_uri, __clean and q."""
+    from parquet_editor_spark.functions import text as X
+    from parquet_editor_spark.operators import multimodal as MM
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") % every == 0)
+    )
+
+    def make(i: int, text) -> bytes:
+        from parquet_editor_spark.sources.warc import make_warc
+
+        body = (
+            f'<html><body class="c{i % 7}"><h1>Doc &amp; {i}'
+            "</h1><p>"
+            + (text or "").replace(" data ", " &quot;data&quot; ")
+            + "</p><script>var x = 1;</script><style>p{}"
+            "</style></body></html>"
+        )
+        recs = [
+            {
+                "warc_type": "response",
+                "target_uri": uri,
+                "content_type": "text/html",
+                "payload": body,
+            }
+            for uri in uris(i)
+        ]
+        return make_warc(recs, gzip_members=i % 2 == 1)
+
+    clean = X.strip_markup(F.col("body"))
+    return (
+        MM.warc_records(_doc_payloads(docs, make))
+        .filter(F.col("warc_type") == "response")
+        .select(
+            "doc_id",
+            "rec_idx",
+            "target_uri",
+            clean.alias("__clean"),
+        )
+        .withColumn("q", X.quality_score(F.col("__clean")))
+        .filter(F.col("q") >= 0.6)
     )
 
 
@@ -3447,71 +3434,13 @@ def q_crawl_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, never visit the driver); everything downstream is
     codegen'd projections + one filter — no joins, no aggregation
     until the final sort."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.functions import text as X
-    from parquet_editor_spark.operators import multimodal as MM
 
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") % 73 == 0)
-    )
+    def uris(i: int) -> list:
+        return [f"https://crawl.example/{i}/{j}" for j in range(1, 2 + i % 2)]
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
-        from parquet_editor_spark.sources.warc import make_warc
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                body = (
-                    f'<html><body class="c{i % 7}"><h1>Doc &amp; {i}'
-                    "</h1><p>"
-                    + (text or "").replace(
-                        " data ", " &quot;data&quot; "
-                    )
-                    + "</p><script>var x = 1;</script><style>p{}"
-                    "</style></body></html>"
-                )
-                recs = [
-                    {
-                        "warc_type": "response",
-                        "target_uri": f"https://crawl.example/{i}/{j}",
-                        "content_type": "text/html",
-                        "payload": body,
-                    }
-                    for j in range(1, 2 + i % 2)
-                ]
-                payloads.append(
-                    make_warc(recs, gzip_members=i % 2 == 1)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
-
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
-    clean = X.strip_markup(F.col("body"))
-    scored = (
-        MM.warc_records(with_payload)
-        .filter(F.col("warc_type") == "response")
-        .select(
-            "doc_id",
-            "rec_idx",
-            "target_uri",
-            clean.alias("__clean"),
-        )
-        .withColumn("q", X.quality_score(F.col("__clean")))
-    )
     return (
-        scored.filter(F.col("q") >= 0.6)
+        _warc_curated(spark, sf_dir, 73, uris)
         .select(
             "doc_id",
             "rec_idx",
@@ -3540,80 +3469,24 @@ def q_crawl_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: archive explode inside one Arrow pass, codegen
     strip/quality/URL projections, then exactly ONE shuffle (on host,
     for the cap windows)."""
-    from pyspark.sql import types as T
-
-    from parquet_editor_spark.functions import text as X
     from parquet_editor_spark.functions import urls as U
-    from parquet_editor_spark.operators import multimodal as MM
 
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") % 89 == 0)
-    )
+    def uris(i: int) -> list:
+        out = []
+        for j in range(1, 2 + i % 3):
+            scheme = "HTTPS" if (i + j) % 2 == 0 else "http"
+            www = "WWW." if j % 2 == 0 else ""
+            sub = "m." if i % 3 == 0 else ""
+            tld = "com" if i % 2 == 0 else "co.uk"
+            port = ":8080" if (i + j) % 3 == 0 else ""
+            q = "?b=2&a=1" if j % 2 == 1 else ""
+            out.append(
+                f"{scheme}://{www}{sub}Site{i % 5}.{tld}{port}/page/{i}/{j}{q}"
+            )
+        return out
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
-        from parquet_editor_spark.sources.warc import make_warc
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                body = (
-                    f'<html><body class="c{i % 7}"><h1>Doc &amp; {i}'
-                    "</h1><p>"
-                    + (text or "").replace(
-                        " data ", " &quot;data&quot; "
-                    )
-                    + "</p><script>var x = 1;</script><style>p{}"
-                    "</style></body></html>"
-                )
-                recs = []
-                for j in range(1, 2 + i % 3):
-                    scheme = "HTTPS" if (i + j) % 2 == 0 else "http"
-                    www = "WWW." if j % 2 == 0 else ""
-                    sub = "m." if i % 3 == 0 else ""
-                    tld = "com" if i % 2 == 0 else "co.uk"
-                    port = ":8080" if (i + j) % 3 == 0 else ""
-                    q = "?b=2&a=1" if j % 2 == 1 else ""
-                    recs.append(
-                        {
-                            "warc_type": "response",
-                            "target_uri": (
-                                f"{scheme}://{www}{sub}Site{i % 5}"
-                                f".{tld}{port}/page/{i}/{j}{q}"
-                            ),
-                            "content_type": "text/html",
-                            "payload": body,
-                        }
-                    )
-                payloads.append(
-                    make_warc(recs, gzip_members=i % 2 == 1)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
-
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
-    clean = X.strip_markup(F.col("body"))
     scored = (
-        MM.warc_records(with_payload)
-        .filter(F.col("warc_type") == "response")
-        .select(
-            "doc_id",
-            "rec_idx",
-            "target_uri",
-            clean.alias("__clean"),
-        )
-        .withColumn("q", X.quality_score(F.col("__clean")))
-        .filter(F.col("q") >= 0.6)
+        _warc_curated(spark, sf_dir, 89, uris)
         .select(
             "doc_id",
             "rec_idx",
@@ -3634,6 +3507,28 @@ def q_crawl_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id", "rec_idx")
     )
+
+
+def _block_report(blocks: DataFrame) -> DataFrame:
+    """The packed-block report of ``pack_id_blocks`` output: per block
+    its id, doc and id counts, the first 10 ids as CSV and the md5 of
+    all ids as CSV, in block order."""
+    ids_csv = F.array_join(
+        F.transform("input_ids", lambda x: x.cast("string")), ","
+    )
+    head_csv = F.array_join(
+        F.transform(
+            F.slice("input_ids", 1, 10), lambda x: x.cast("string")
+        ),
+        ",",
+    )
+    return blocks.select(
+        "block_id",
+        "n_docs",
+        "n_ids",
+        head_csv.alias("head_ids"),
+        F.md5(F.encode(ids_csv, "utf-8")).alias("ids_md5"),
+    ).orderBy("block_id")
 
 
 def _v5_curation_kept(
@@ -3886,22 +3781,7 @@ def q_pipeline_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks = TP.pack_id_blocks(
         toks, "id", "input_ids", block_tokens=32, bucket_docs=64
     )
-    ids_csv = F.array_join(
-        F.transform("input_ids", lambda x: x.cast("string")), ","
-    )
-    head_csv = F.array_join(
-        F.transform(
-            F.slice("input_ids", 1, 10), lambda x: x.cast("string")
-        ),
-        ",",
-    )
-    return blocks.select(
-        "block_id",
-        "n_docs",
-        "n_ids",
-        head_csv.alias("head_ids"),
-        F.md5(F.encode(ids_csv, "utf-8")).alias("ids_md5"),
-    ).orderBy("block_id")
+    return _block_report(blocks)
 
 
 def q_pipeline_curation_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3958,22 +3838,7 @@ def q_pipeline_curation_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks = TP.pack_id_blocks(
         toks, "id", "input_ids", block_tokens=32, bucket_docs=64
     )
-    ids_csv = F.array_join(
-        F.transform("input_ids", lambda x: x.cast("string")), ","
-    )
-    head_csv = F.array_join(
-        F.transform(
-            F.slice("input_ids", 1, 10), lambda x: x.cast("string")
-        ),
-        ",",
-    )
-    return blocks.select(
-        "block_id",
-        "n_docs",
-        "n_ids",
-        head_csv.alias("head_ids"),
-        F.md5(F.encode(ids_csv, "utf-8")).alias("ids_md5"),
-    ).orderBy("block_id")
+    return _block_report(blocks)
 
 
 def q_pipeline_curation_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4135,22 +4000,7 @@ def q_pipeline_curation_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks = TP.pack_id_blocks(
         toks, "id", "input_ids", block_tokens=32, bucket_docs=64
     )
-    ids_csv = F.array_join(
-        F.transform("input_ids", lambda x: x.cast("string")), ","
-    )
-    head_csv = F.array_join(
-        F.transform(
-            F.slice("input_ids", 1, 10), lambda x: x.cast("string")
-        ),
-        ",",
-    )
-    return blocks.select(
-        "block_id",
-        "n_docs",
-        "n_ids",
-        head_csv.alias("head_ids"),
-        F.md5(F.encode(ids_csv, "utf-8")).alias("ids_md5"),
-    ).orderBy("block_id")
+    return _block_report(blocks)
 
 
 def q_pipeline_curation_v9(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4675,8 +4525,6 @@ def q_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor-side).  The CRC-32C is pinned to the public check value
     in unit tests, so the oracle only needs the payload arithmetic:
     sizes/prefixes recompute from ``documents.text``."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -4685,35 +4533,15 @@ def q_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 79 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int, text) -> bytes:
         from parquet_editor_spark.sources.tfrecord import make_tfrecord
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                payloads.append(
-                    make_tfrecord(
-                        [
-                            f"rec {i}-{j}\n" + (text or "")
-                            for j in range(1 + i % 3)
-                        ]
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        return make_tfrecord(
+            [f"rec {i}-{j}\n" + (text or "") for j in range(1 + i % 3)]
+        )
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
     return (
-        MM.tfrecord_records(with_payload)
+        MM.tfrecord_records(_doc_payloads(docs, make))
         .select(
             "doc_id",
             "rec_idx",
@@ -5122,22 +4950,7 @@ def q_train_tokenize_pack_v1(
     blocks = TP.pack_id_blocks(
         toks, "id", "input_ids", block_tokens=40, bucket_docs=64
     )
-    ids_csv = F.array_join(
-        F.transform("input_ids", lambda x: x.cast("string")), ","
-    )
-    head_csv = F.array_join(
-        F.transform(
-            F.slice("input_ids", 1, 10), lambda x: x.cast("string")
-        ),
-        ",",
-    )
-    return blocks.select(
-        "block_id",
-        "n_docs",
-        "n_ids",
-        head_csv.alias("head_ids"),
-        F.md5(F.encode(ids_csv, "utf-8")).alias("ids_md5"),
-    ).orderBy("block_id")
+    return _block_report(blocks)
 
 
 def q_train_tokenize_pack_v2(
@@ -5180,22 +4993,7 @@ def q_train_tokenize_pack_v2(
     blocks = TP.pack_id_blocks(
         toks, "id", "input_ids", block_tokens=48, bucket_docs=64
     )
-    ids_csv = F.array_join(
-        F.transform("input_ids", lambda x: x.cast("string")), ","
-    )
-    head_csv = F.array_join(
-        F.transform(
-            F.slice("input_ids", 1, 10), lambda x: x.cast("string")
-        ),
-        ",",
-    )
-    return blocks.select(
-        "block_id",
-        "n_docs",
-        "n_ids",
-        head_csv.alias("head_ids"),
-        F.md5(F.encode(ids_csv, "utf-8")).alias("ids_md5"),
-    ).orderBy("block_id")
+    return _block_report(blocks)
 
 
 def q_bpe_merge_sweep_docs(
@@ -6101,22 +5899,7 @@ def q_train_tokenize_pack_v3(
     blocks = TP.pack_id_blocks(
         toks, "id", "input_ids", block_tokens=64, bucket_docs=64
     )
-    ids_csv = F.array_join(
-        F.transform("input_ids", lambda x: x.cast("string")), ","
-    )
-    head_csv = F.array_join(
-        F.transform(
-            F.slice("input_ids", 1, 10), lambda x: x.cast("string")
-        ),
-        ",",
-    )
-    return blocks.select(
-        "block_id",
-        "n_docs",
-        "n_ids",
-        head_csv.alias("head_ids"),
-        F.md5(F.encode(ids_csv, "utf-8")).alias("ids_md5"),
-    ).orderBy("block_id")
+    return _block_report(blocks)
 
 
 def q_semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6518,8 +6301,6 @@ def q_epub_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilds each chapter's XHTML string arithmetically and applies
     the same strip chain, so a byte lost anywhere in the container
     walk or a spine misorder fails the md5."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.functions import text as X
     from parquet_editor_spark.operators import multimodal as MM
 
@@ -6529,36 +6310,18 @@ def q_epub_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 101 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int, text) -> bytes:
         from parquet_editor_spark.sources.epub import make_epub
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                chapters = [
-                    (
-                        f"Chapter {i}-{j}",
-                        (text or "")[j * 80:(j + 1) * 80],
-                    )
-                    for j in range(1 + i % 3)
-                ]
-                payloads.append(make_epub(chapters, title=f"Doc {i}"))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        chapters = [
+            (f"Chapter {i}-{j}", (text or "")[j * 80:(j + 1) * 80])
+            for j in range(1 + i % 3)
+        ]
+        return make_epub(chapters, title=f"Doc {i}")
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
     clean = X.strip_markup(F.col("xhtml"))
     return (
-        MM.epub_book_chapters(with_payload)
+        MM.epub_book_chapters(_doc_payloads(docs, make))
         .select(
             "doc_id",
             "chapter_idx",
@@ -6933,6 +6696,39 @@ def q_stream_bloom_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _politeness_schedule(frontier: DataFrame, hosts: DataFrame) -> DataFrame:
+    """The frontier v2/v3 politeness tail: ``hosts``' robots rules
+    (longest-match) filter ``frontier``, then each host's allowed URLs
+    are ranked by URL and spaced by its parsed ``Crawl-delay`` — fetch
+    rank and start offset per URL."""
+    from pyspark.sql import Window as W
+
+    from parquet_editor_spark.functions import urls as U
+
+    rules = U.robots_rules(hosts, "host", "robots")
+    allowed = U.robots_allowed(frontier, rules, "host", "path").filter(
+        F.col("allowed") == 1
+    )
+    delays = U.robots_crawl_delay(hosts, "host", "robots")
+    rank = F.row_number().over(
+        W.partitionBy("host").orderBy("canon_url")
+    )
+    return (
+        allowed.join(delays, "host")
+        .withColumn("fetch_rank", rank)
+        .select(
+            "host",
+            "canon_url",
+            "crawl_delay_s",
+            "fetch_rank",
+            ((F.col("fetch_rank") - 1) * F.col("crawl_delay_s"))
+            .cast("long")
+            .alias("fetch_offset_s"),
+        )
+        .orderBy("host", "fetch_rank")
+    )
+
+
 def q_crawl_frontier_v3(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -7075,80 +6871,18 @@ def q_crawl_frontier_v3(
     fresh = D.bloom_member(
         frontier, bloom, "canon_url", n_words=16, k=4
     ).filter(F.col("member") == 0)
-    rules = U.robots_rules(hosts, "host", "robots")
-    allowed = U.robots_allowed(fresh, rules, "host", "path").filter(
-        F.col("allowed") == 1
-    )
-    delays = U.robots_crawl_delay(hosts, "host", "robots")
-    from pyspark.sql import Window as W
-
-    rank = F.row_number().over(
-        W.partitionBy("host").orderBy("canon_url")
-    )
-    return (
-        allowed.join(delays, "host")
-        .withColumn("fetch_rank", rank)
-        .select(
-            "host",
-            "canon_url",
-            "crawl_delay_s",
-            "fetch_rank",
-            ((F.col("fetch_rank") - 1) * F.col("crawl_delay_s"))
-            .cast("long")
-            .alias("fetch_offset_s"),
-        )
-        .orderBy("host", "fetch_rank")
-    )
+    return _politeness_schedule(fresh, hosts)
 
 
-def q_crawl_frontier_v4(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Frontier v4 (r13 — the r12 verdict's Missing #1: PRIORITY
-    ordering, per-host SHARDING, robots EXPIRY/recrawl): v3 decided
-    what MAY be fetched and when (politeness); v4 decides in what
-    ORDER and on which WORKER.  Per-doc HTML links 13 hosts with
-    topic-bearing anchor text; the pipeline consumes BOTH r12
-    signals the verdict called unconsumed:
-
-    * anchor-text RELEVANCE (``extract_anchors`` → per-anchor term
-      hits on {spark, data} → per-target ``rel_sum``),
-    * host CENTRALITY (the same outlinks build the host graph →
-      3-superstep ``graph.pagerank``),
-
-    combined as ``priority = rel_sum + host_rank`` and consumed by
-    the per-host schedule window (``ORDER BY priority DESC, url``).
-    Per-host SHARD assignment = portable polynomial hash of the host
-    mod 8 (the writer partition key a 1000-executor frontier fans out
-    on — pure projection, no extra shuffle).  Robots EXPIRY: each
-    host's robots snapshot carries an age; stale hosts
-    (age > 48 s here; 24 h in production) get ``robots_refresh = 1``
-    and their page fetches shift one ``Crawl-delay`` slot — the
-    refresh fetch occupies slot 0 (recrawl-before-crawl semantics).
-    Robots ``Disallow: /priv`` still gates targets.
-
-    Scale shape: anchor extraction/resolution/relevance pure codegen;
-    ONE distinct-aggregate on the target URL; the host graph is
-    host-cardinality (13 rows here, ~10⁷ at 100 TB — still a
-    broadcastable rank table); rule/delay/rank joins broadcast; the
-    host-keyed schedule window is the only data-sized single-key
-    shuffle (pinned by the plan test)."""
-    from parquet_editor_spark.functions import urls as U
-    from parquet_editor_spark.functions.hashing import poly_string_hash
-    from parquet_editor_spark.operators import graph as G
-
-    d = F.col("doc_id")
-    docs = _t(spark, sf_dir, "documents")
-    page = F.concat(
-        F.lit("https://g"),
-        (d % 13).cast("string"),
-        F.lit(".com/p/"),
-        (d % 3).cast("string"),
-    )
+def _frontier_anchor_parts(d: "F.Column") -> list:
+    """Frontier v4's per-doc anchor HTML as ``F.concat`` parts: a /t/
+    cross-host link whose anchor text is topic-bearing for even docs,
+    a relative /local/ link, a /priv/ link robots must gate, and a
+    plain /u/ cross-host link."""
     a1_txt = F.when(
         d % 2 == 0, F.lit("fast spark data engine")
     ).otherwise(F.lit("cat pictures gallery"))
-    html = F.concat(
+    return [
         F.lit('<a href="https://g'),
         ((d * 3 + 1) % 13).cast("string"),
         F.lit(".com/t/"),
@@ -7166,15 +6900,38 @@ def q_crawl_frontier_v4(
         F.lit(".com/u/"),
         (d % 2).cast("string"),
         F.lit('">plain link</a>'),
+    ]
+
+
+def _frontier_front(
+    docs: DataFrame,
+    html: "F.Column",
+    canon: Callable[["F.Column"], "F.Column"],
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The frontier v4/v5 front stage.  Anchors of each doc's ``html``
+    resolve against its page URL and canonicalize through ``canon``;
+    their relevance hits on {spark, data} sum per target (``rel_sum``),
+    and their host pairs (seamed) feed a 3-superstep host pagerank.
+    Returns the frontier (canon_url, rel_sum, host, path), the host
+    rank table and the seamed per-host robots snapshots."""
+    from parquet_editor_spark.functions import urls as U
+    from parquet_editor_spark.operators import graph as G
+
+    d = F.col("doc_id")
+    page = F.concat(
+        F.lit("https://g"),
+        (d % 13).cast("string"),
+        F.lit(".com/p/"),
+        (d % 3).cast("string"),
     )
     pages = docs.select(page.alias("page_url"), html.alias("html"))
     links = pages.select(
         "page_url", F.explode(U.extract_anchors("html")).alias("a")
     ).select(
         "page_url",
-        U.canonical_url(
-            U.resolve_url("page_url", F.col("a.href"))
-        ).alias("canon_url"),
+        canon(U.resolve_url("page_url", F.col("a.href"))).alias(
+            "canon_url"
+        ),
         F.col("a.anchor").alias("anchor"),
     )
     toks = F.split(F.lower("anchor"), " ")
@@ -7224,6 +6981,21 @@ def q_crawl_frontier_v4(
         U.url_host(F.col("canon_url")).alias("host"),
         U.url_path(F.col("canon_url")).alias("path"),
     )
+    return frontier, ranks, hosts
+
+
+def _frontier_back(
+    frontier: DataFrame, ranks: DataFrame, hosts: DataFrame
+) -> DataFrame:
+    """The frontier v4/v5 back stage: robots allow on ``frontier``,
+    Crawl-delay and robots expiry per host, ``rel_sum + host_rank``
+    priority ordering the per-host fetch window, the polynomial host
+    shard and the fetch offsets (a stale host's refresh takes slot 0)."""
+    from pyspark.sql import Window as W
+
+    from parquet_editor_spark.functions import urls as U
+    from parquet_editor_spark.functions.hashing import poly_string_hash
+
     rules = U.robots_rules(hosts, "host", "robots")
     allowed = U.robots_allowed(frontier, rules, "host", "path").filter(
         F.col("allowed") == 1
@@ -7233,8 +7005,6 @@ def q_crawl_frontier_v4(
         "host",
         (F.col("robots_age_s") > 48).cast("int").alias("robots_refresh"),
     )
-    from pyspark.sql import Window as W
-
     pri = F.col("rel_sum") + F.col("host_rank")
     rank_w = F.row_number().over(
         W.partitionBy("host").orderBy(
@@ -7270,6 +7040,45 @@ def q_crawl_frontier_v4(
     )
 
 
+def q_crawl_frontier_v4(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Frontier v4 (r13 — the r12 verdict's Missing #1: PRIORITY
+    ordering, per-host SHARDING, robots EXPIRY/recrawl): v3 decided
+    what MAY be fetched and when (politeness); v4 decides in what
+    ORDER and on which WORKER.  Per-doc HTML links 13 hosts with
+    topic-bearing anchor text; the pipeline consumes BOTH r12
+    signals the verdict called unconsumed:
+
+    * anchor-text RELEVANCE (``extract_anchors`` → per-anchor term
+      hits on {spark, data} → per-target ``rel_sum``),
+    * host CENTRALITY (the same outlinks build the host graph →
+      3-superstep ``graph.pagerank``),
+
+    combined as ``priority = rel_sum + host_rank`` and consumed by
+    the per-host schedule window (``ORDER BY priority DESC, url``).
+    Per-host SHARD assignment = portable polynomial hash of the host
+    mod 8 (the writer partition key a 1000-executor frontier fans out
+    on — pure projection, no extra shuffle).  Robots EXPIRY: each
+    host's robots snapshot carries an age; stale hosts
+    (age > 48 s here; 24 h in production) get ``robots_refresh = 1``
+    and their page fetches shift one ``Crawl-delay`` slot — the
+    refresh fetch occupies slot 0 (recrawl-before-crawl semantics).
+    Robots ``Disallow: /priv`` still gates targets.
+
+    Scale shape: anchor extraction/resolution/relevance pure codegen;
+    ONE distinct-aggregate on the target URL; the host graph is
+    host-cardinality (13 rows here, ~10⁷ at 100 TB — still a
+    broadcastable rank table); rule/delay/rank joins broadcast; the
+    host-keyed schedule window is the only data-sized single-key
+    shuffle (pinned by the plan test)."""
+    from parquet_editor_spark.functions import urls as U
+
+    docs = _t(spark, sf_dir, "documents")
+    html = F.concat(*_frontier_anchor_parts(F.col("doc_id")))
+    return _frontier_back(*_frontier_front(docs, html, U.canonical_url))
+
+
 def q_crawl_frontier_v5(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -7299,39 +7108,12 @@ def q_crawl_frontier_v5(
     string expression in the hot map; the host-keyed schedule window
     remains the only data-sized single-key shuffle."""
     from parquet_editor_spark.functions import urls as U
-    from parquet_editor_spark.functions.hashing import poly_string_hash
     from parquet_editor_spark.operators import dedup as D
-    from parquet_editor_spark.operators import graph as G
 
     d = F.col("doc_id")
     docs = _t(spark, sf_dir, "documents")
-    page = F.concat(
-        F.lit("https://g"),
-        (d % 13).cast("string"),
-        F.lit(".com/p/"),
-        (d % 3).cast("string"),
-    )
-    a1_txt = F.when(
-        d % 2 == 0, F.lit("fast spark data engine")
-    ).otherwise(F.lit("cat pictures gallery"))
     html = F.concat(
-        F.lit('<a href="https://g'),
-        ((d * 3 + 1) % 13).cast("string"),
-        F.lit(".com/t/"),
-        (d % 4).cast("string"),
-        F.lit('">'),
-        a1_txt,
-        F.lit("</a><a href='/local/"),
-        (d % 5).cast("string"),
-        F.lit("'>spark tips here</a>"),
-        F.lit('<a href="/priv/'),
-        (d % 3).cast("string"),
-        F.lit('">secret spark data</a>'),
-        F.lit('<a href="https://g'),
-        ((d + 5) % 13).cast("string"),
-        F.lit(".com/u/"),
-        (d % 2).cast("string"),
-        F.lit('">plain link</a>'),
+        *_frontier_anchor_parts(d),
         # the tracking-wrapped duplicate of the first /t/ target —
         # canonical_url_no_tracking must fold it in
         F.lit('<a href="https://g'),
@@ -7340,36 +7122,8 @@ def q_crawl_frontier_v5(
         (d % 4).cast("string"),
         F.lit('?utm_source=feed">spark data news</a>'),
     )
-    pages = docs.select(page.alias("page_url"), html.alias("html"))
-    links = pages.select(
-        "page_url", F.explode(U.extract_anchors("html")).alias("a")
-    ).select(
-        "page_url",
-        U.canonical_url_no_tracking(
-            U.resolve_url("page_url", F.col("a.href"))
-        ).alias("canon_url"),
-        F.col("a.anchor").alias("anchor"),
-    )
-    toks = F.split(F.lower("anchor"), " ")
-    scored = links.withColumn(
-        "rel",
-        F.array_contains(toks, "spark").cast("int")
-        + F.array_contains(toks, "data").cast("int"),
-    )
-    tgt = scored.groupBy("canon_url").agg(
-        F.sum("rel").cast("long").alias("rel_sum")
-    )
-    edges = _seam(
-        links.select(
-            U.url_host("page_url").alias("src"),
-            U.url_host("canon_url").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .select("src", "dst", F.lit(1.0).alias("w"))
-    )
-    ranks = G.pagerank(edges, "src", "dst", "w", iters=3).select(
-        F.col("node").alias("host"), F.col("rank").alias("host_rank")
+    frontier, ranks, hosts = _frontier_front(
+        docs, html, U.canonical_url_no_tracking
     )
     # incremental seen-set: yesterday's bitmap ∪ last night's crawl
     day1 = docs.select(
@@ -7395,72 +7149,10 @@ def q_crawl_frontier_v5(
         D.bloom_build(day1, "key", n_words=16, k=4),
         D.bloom_build(day2, "key", n_words=16, k=4),
     )
-    k = F.col("k")
-    hosts = _seam(  # host-sized; read by rules, delays and ages
-        docs.select((d % 13).alias("k"))
-        .distinct()
-        .select(
-            F.concat(
-                F.lit("g"), k.cast("string"), F.lit(".com")
-            ).alias("host"),
-            F.concat(
-                F.lit("User-agent: *\nDisallow: /priv\nCrawl-delay: "),
-                (1 + k % 3).cast("string"),
-            ).alias("robots"),
-            ((k * 7) % 97).cast("int").alias("robots_age_s"),
-        )
-    )
-    frontier = tgt.select(
-        "canon_url",
-        "rel_sum",
-        U.url_host(F.col("canon_url")).alias("host"),
-        U.url_path(F.col("canon_url")).alias("path"),
-    )
     fresh = D.bloom_member(
         frontier, merged, "canon_url", n_words=16, k=4
     ).filter(F.col("member") == 0)
-    rules = U.robots_rules(hosts, "host", "robots")
-    allowed = U.robots_allowed(fresh, rules, "host", "path").filter(
-        F.col("allowed") == 1
-    )
-    delays = U.robots_crawl_delay(hosts, "host", "robots")
-    ages = hosts.select(
-        "host",
-        (F.col("robots_age_s") > 48).cast("int").alias("robots_refresh"),
-    )
-    from pyspark.sql import Window as W
-
-    pri = F.col("rel_sum") + F.col("host_rank")
-    rank_w = F.row_number().over(
-        W.partitionBy("host").orderBy(pri.desc(), F.col("canon_url"))
-    )
-    return (
-        allowed.join(F.broadcast(ranks), "host")
-        .join(F.broadcast(delays), "host")
-        .join(F.broadcast(ages), "host")
-        .withColumn("priority", F.round(pri, 6))
-        .withColumn("fetch_rank", rank_w)
-        .select(
-            "host",
-            F.pmod(poly_string_hash(F.col("host")), F.lit(8))
-            .cast("int")
-            .alias("shard"),
-            "canon_url",
-            "rel_sum",
-            "host_rank",
-            "priority",
-            "robots_refresh",
-            "crawl_delay_s",
-            "fetch_rank",
-            (
-                (F.col("fetch_rank") - 1 + F.col("robots_refresh"))
-                * F.col("crawl_delay_s")
-            )
-            .cast("long")
-            .alias("fetch_offset_s"),
-        )
-        .orderBy("host", "fetch_rank")
-    )
+    return _frontier_back(fresh, ranks, hosts)
 
 
 def q_crawl_schedule_docs(
@@ -7804,30 +7496,7 @@ def q_crawl_frontier_v2(
     )
     # hosts feeds both the rule parse and the delay parse
     hosts = _seam(hosts)
-    rules = U.robots_rules(hosts, "host", "robots")
-    allowed = U.robots_allowed(frontier, rules, "host", "path").filter(
-        F.col("allowed") == 1
-    )
-    delays = U.robots_crawl_delay(hosts, "host", "robots")
-    from pyspark.sql import Window as W
-
-    rank = F.row_number().over(
-        W.partitionBy("host").orderBy("canon_url")
-    )
-    return (
-        allowed.join(delays, "host")
-        .withColumn("fetch_rank", rank)
-        .select(
-            "host",
-            "canon_url",
-            "crawl_delay_s",
-            "fetch_rank",
-            ((F.col("fetch_rank") - 1) * F.col("crawl_delay_s"))
-            .cast("long")
-            .alias("fetch_offset_s"),
-        )
-        .orderBy("host", "fetch_rank")
-    )
+    return _politeness_schedule(frontier, hosts)
 
 
 
@@ -7936,8 +7605,6 @@ def q_wet_export_roundtrip(
     format; a header/length/CRLF defect on either side breaks the
     closed-form oracle, which recomputes every column from
     ``documents`` alone."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -7949,51 +7616,30 @@ def q_wet_export_roundtrip(
         .filter(F.col("doc_id") % 43 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int, text: str) -> bytes:
         from parquet_editor_spark.sources.warc import make_warc
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                uri = f"https://wet{i % 23}.org/d/{i}"
-                payloads.append(
-                    make_warc(
-                        [
-                            {
-                                "warc_type": "conversion",
-                                "target_uri": uri,
-                                "content_type": "text/plain",
-                                "payload": text,
-                            },
-                            {
-                                "warc_type": "metadata",
-                                "target_uri": uri,
-                                "content_type": (
-                                    "application/warc-fields"
-                                ),
-                                "payload": (
-                                    f"extracted-chars: {len(text)}"
-                                ),
-                            },
-                        ],
-                        gzip_members=i % 2 == 1,
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        uri = f"https://wet{i % 23}.org/d/{i}"
+        return make_warc(
+            [
+                {
+                    "warc_type": "conversion",
+                    "target_uri": uri,
+                    "content_type": "text/plain",
+                    "payload": text,
+                },
+                {
+                    "warc_type": "metadata",
+                    "target_uri": uri,
+                    "content_type": "application/warc-fields",
+                    "payload": f"extracted-chars: {len(text)}",
+                },
+            ],
+            gzip_members=i % 2 == 1,
+        )
 
-    exported = docs.mapInPandas(gen, schema=gen_schema)
     return (
-        MM.warc_records(exported)
+        MM.warc_records(_doc_payloads(docs, make))
         .select(
             "doc_id",
             F.col("rec_idx").cast("int").alias("rec_idx"),
@@ -8964,6 +8610,60 @@ def q_trained_quality_filter_docs(
     )
 
 
+def _pdf_pages(
+    tag: str, i: int, clean: str, n_pages: int, width: int
+) -> list:
+    """Doc ``i``'s page lines: page ``p`` is the header ``"{tag} {i}
+    page {p}"`` plus the three ``width``-char slices of ``clean`` that
+    follow the previous pages' slices."""
+    return [
+        [f"{tag} {i} page {p}"]
+        + [
+            clean[(p * 3 + m) * width:(p * 3 + m) * width + width]
+            for m in range(3)
+        ]
+        for p in range(n_pages)
+    ]
+
+
+def _pdf_text_docs(
+    spark: SparkSession,
+    sf_dir: str,
+    every: int,
+    make: Callable[[int, str], bytes],
+) -> DataFrame:
+    """The PDF fixture body: every ``every``-th doc's text with each
+    non-printable-ASCII char replaced by ``#`` is encoded per doc by
+    ``make(doc_id, clean)``, then extracted back through the production
+    ``pdf_pages`` walk — one row per page with its length, 40-char
+    prefix and md5, which each entry's oracle rebuilds from
+    ``documents.text``."""
+    from parquet_editor_spark.operators import multimodal as MM
+
+    docs = (
+        _t(spark, sf_dir, "documents")
+        .select(
+            "doc_id",
+            F.regexp_replace(
+                F.coalesce(F.col("text"), F.lit("")), "[^ -~]", "#"
+            ).alias("clean"),
+        )
+        .filter(F.col("doc_id") % every == 0)
+    )
+    return (
+        MM.pdf_pages(_doc_payloads(docs, make))
+        .select(
+            "doc_id",
+            "page_idx",
+            "n_pages",
+            F.length("page_text").cast("long").alias("n_chars"),
+            F.substring("page_text", 1, 40).alias("text_prefix"),
+            F.md5(F.encode("page_text", "utf-8")).alias("text_md5"),
+        )
+        .orderBy("doc_id", "page_idx")
+    )
+
+
 def q_pdf_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF text extraction (sources/pdf.py + ``pdf_pages``, new r10 —
     the r9 verdict's #6: the largest remaining real-world document
@@ -8976,60 +8676,13 @@ def q_pdf_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle rebuilds each page's text arithmetically from
     ``documents.text``, so any defect anywhere in the encoder/parser
     pair fails the md5."""
-    from pyspark.sql import types as T
 
-    from parquet_editor_spark.operators import multimodal as MM
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            F.regexp_replace(
-                F.coalesce(F.col("text"), F.lit("")), "[^ -~]", "#"
-            ).alias("clean"),
-        )
-        .filter(F.col("doc_id") % 83 == 0)
-    )
-
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int, clean: str) -> bytes:
         from parquet_editor_spark.sources.pdf import encode_pdf
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, clean in zip(pdf["doc_id"], pdf["clean"]):
-                i = int(raw)
-                pages = []
-                for p in range(1 + i % 3):
-                    lines = [f"doc {i} page {p}"] + [
-                        (clean or "")[(p * 3 + m) * 48:(p * 3 + m) * 48 + 48]
-                        for m in range(3)
-                    ]
-                    pages.append(lines)
-                payloads.append(encode_pdf(pages))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        return encode_pdf(_pdf_pages("doc", i, clean, 1 + i % 3, 48))
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
-    return (
-        MM.pdf_pages(with_payload)
-        .select(
-            "doc_id",
-            "page_idx",
-            "n_pages",
-            F.length("page_text").cast("long").alias("n_chars"),
-            F.substring("page_text", 1, 40).alias("text_prefix"),
-            F.md5(F.encode("page_text", "utf-8")).alias("text_md5"),
-        )
-        .orderBy("doc_id", "page_idx")
-    )
+    return _pdf_text_docs(spark, sf_dir, 83, make)
 
 
 def q_pdf_modern_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9045,60 +8698,15 @@ def q_pdf_modern_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin, so the two entries cover disjoint doc sets and shapes; the
     oracle rebuilds each page arithmetically from ``documents.text``,
     failing the md5 on any defect in the modern encoder/parser pair."""
-    from pyspark.sql import types as T
 
-    from parquet_editor_spark.operators import multimodal as MM
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            F.regexp_replace(
-                F.coalesce(F.col("text"), F.lit("")), "[^ -~]", "#"
-            ).alias("clean"),
-        )
-        .filter(F.col("doc_id") % 97 == 0)
-    )
-
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int, clean: str) -> bytes:
         from parquet_editor_spark.sources.pdf import encode_pdf_modern
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, clean in zip(pdf["doc_id"], pdf["clean"]):
-                i = int(raw)
-                pages = []
-                for p in range(1 + i % 4):
-                    lines = [f"mdoc {i} page {p}"] + [
-                        (clean or "")[(p * 3 + m) * 44:(p * 3 + m) * 44 + 44]
-                        for m in range(3)
-                    ]
-                    pages.append(lines)
-                payloads.append(encode_pdf_modern(pages))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
-
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
-    return (
-        MM.pdf_pages(with_payload)
-        .select(
-            "doc_id",
-            "page_idx",
-            "n_pages",
-            F.length("page_text").cast("long").alias("n_chars"),
-            F.substring("page_text", 1, 40).alias("text_prefix"),
-            F.md5(F.encode("page_text", "utf-8")).alias("text_md5"),
+        return encode_pdf_modern(
+            _pdf_pages("mdoc", i, clean, 1 + i % 4, 44)
         )
-        .orderBy("doc_id", "page_idx")
-    )
+
+    return _pdf_text_docs(spark, sf_dir, 97, make)
 
 
 def q_pdf_encrypted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9114,63 +8722,16 @@ def q_pdf_encrypted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     authentication or per-object decryption fails the md5; truly
     password-protected or AES documents gate loudly
     (tests/test_pdf.py)."""
-    from pyspark.sql import types as T
 
-    from parquet_editor_spark.operators import multimodal as MM
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            F.regexp_replace(
-                F.coalesce(F.col("text"), F.lit("")), "[^ -~]", "#"
-            ).alias("clean"),
-        )
-        .filter(F.col("doc_id") % 103 == 0)
-    )
-
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int, clean: str) -> bytes:
         from parquet_editor_spark.sources.pdf import encode_pdf_encrypted
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, clean in zip(pdf["doc_id"], pdf["clean"]):
-                i = int(raw)
-                pages = []
-                for p in range(1 + i % 3):
-                    lines = [f"edoc {i} page {p}"] + [
-                        (clean or "")[(p * 3 + m) * 36:(p * 3 + m) * 36 + 36]
-                        for m in range(3)
-                    ]
-                    pages.append(lines)
-                r, bits = (3, 128) if i % 2 == 0 else (2, 40)
-                payloads.append(
-                    encode_pdf_encrypted(pages, r=r, key_bits=bits)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
-
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
-    return (
-        MM.pdf_pages(with_payload)
-        .select(
-            "doc_id",
-            "page_idx",
-            "n_pages",
-            F.length("page_text").cast("long").alias("n_chars"),
-            F.substring("page_text", 1, 40).alias("text_prefix"),
-            F.md5(F.encode("page_text", "utf-8")).alias("text_md5"),
+        r, bits = (3, 128) if i % 2 == 0 else (2, 40)
+        return encode_pdf_encrypted(
+            _pdf_pages("edoc", i, clean, 1 + i % 3, 36), r=r, key_bits=bits
         )
-        .orderBy("doc_id", "page_idx")
-    )
+
+    return _pdf_text_docs(spark, sf_dir, 103, make)
 
 
 def q_pdf_aes_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9185,61 +8746,16 @@ def q_pdf_aes_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     authentication, per-object keys (AES salted with b"sAlT" per
     Algorithm 1).  Oracle rebuilds each page arithmetically; AESV3/R6
     and real user passwords gate loudly (tests/test_pdf.py)."""
-    from pyspark.sql import types as T
 
-    from parquet_editor_spark.operators import multimodal as MM
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            F.regexp_replace(
-                F.coalesce(F.col("text"), F.lit("")), "[^ -~]", "#"
-            ).alias("clean"),
-        )
-        .filter(F.col("doc_id") % 107 == 0)
-    )
-
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int, clean: str) -> bytes:
         from parquet_editor_spark.sources.pdf import encode_pdf_encrypted
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, clean in zip(pdf["doc_id"], pdf["clean"]):
-                i = int(raw)
-                pages = []
-                for p in range(1 + i % 3):
-                    lines = [f"adoc {i} page {p}"] + [
-                        (clean or "")[(p * 3 + m) * 36:(p * 3 + m) * 36 + 36]
-                        for m in range(3)
-                    ]
-                    pages.append(lines)
-                cfm = "/AESV2" if i % 2 == 0 else "/V2"
-                payloads.append(encode_pdf_encrypted(pages, cfm=cfm))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
-
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
-    return (
-        MM.pdf_pages(with_payload)
-        .select(
-            "doc_id",
-            "page_idx",
-            "n_pages",
-            F.length("page_text").cast("long").alias("n_chars"),
-            F.substring("page_text", 1, 40).alias("text_prefix"),
-            F.md5(F.encode("page_text", "utf-8")).alias("text_md5"),
+        cfm = "/AESV2" if i % 2 == 0 else "/V2"
+        return encode_pdf_encrypted(
+            _pdf_pages("adoc", i, clean, 1 + i % 3, 36), cfm=cfm
         )
-        .orderBy("doc_id", "page_idx")
-    )
+
+    return _pdf_text_docs(spark, sf_dir, 107, make)
 
 
 def q_pdf_aesv3_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9253,62 +8769,15 @@ def q_pdf_aesv3_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the production walk.  Oracle rebuilds each page
     arithmetically; real user passwords and filter mixes gate loudly
     (tests/test_pdf.py)."""
-    from pyspark.sql import types as T
 
-    from parquet_editor_spark.operators import multimodal as MM
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            F.regexp_replace(
-                F.coalesce(F.col("text"), F.lit("")), "[^ -~]", "#"
-            ).alias("clean"),
-        )
-        .filter(F.col("doc_id") % 109 == 0)
-    )
-
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i: int, clean: str) -> bytes:
         from parquet_editor_spark.sources.pdf import encode_pdf_encrypted
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, clean in zip(pdf["doc_id"], pdf["clean"]):
-                i = int(raw)
-                pages = []
-                for p in range(1 + i % 3):
-                    lines = [f"vdoc3 {i} page {p}"] + [
-                        (clean or "")[(p * 3 + m) * 36:(p * 3 + m) * 36 + 36]
-                        for m in range(3)
-                    ]
-                    pages.append(lines)
-                payloads.append(
-                    encode_pdf_encrypted(pages, cfm="/AESV3")
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
-
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
-    return (
-        MM.pdf_pages(with_payload)
-        .select(
-            "doc_id",
-            "page_idx",
-            "n_pages",
-            F.length("page_text").cast("long").alias("n_chars"),
-            F.substring("page_text", 1, 40).alias("text_prefix"),
-            F.md5(F.encode("page_text", "utf-8")).alias("text_md5"),
+        return encode_pdf_encrypted(
+            _pdf_pages("vdoc3", i, clean, 1 + i % 3, 36), cfm="/AESV3"
         )
-        .orderBy("doc_id", "page_idx")
-    )
+
+    return _pdf_text_docs(spark, sf_dir, 109, make)
 
 
 # --- URL/host curation fixture (r10): deterministic messy URLs ------------
@@ -9628,8 +9097,6 @@ def q_stream_shard_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the member arithmetic."""
     import uuid
 
-    from pyspark.sql import types as T
-
     from parquet_editor_spark import streaming as ST
     from parquet_editor_spark.operators import multimodal as MM
 
@@ -9637,33 +9104,7 @@ def q_stream_shard_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = docs.filter(F.col("doc_id") % 67 == 0).select(
         "doc_id", "text"
     )
-
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
-        from parquet_editor_spark.sources.tararc import make_tar
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                members = [
-                    (f"shard/{i}/{j}.txt", text or "")
-                    for j in range(2 + i % 3)
-                ]
-                payloads.append(
-                    make_tar(members, mtime=i, gzip_compress=i % 2 == 1)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
-
-    members = MM.tar_members(docs.mapInPandas(gen, schema=gen_schema))
+    members = MM.tar_members(_doc_payloads(docs, _text_shard_tar))
     rolled = members.groupBy(
         (F.col("doc_id") % 8).cast("long").alias("bucket")
     ).agg(

@@ -66,6 +66,36 @@ def test_media_meta_built_only_by_attach_payload():
     assert not offenders, f"hand-built media meta: {offenders}"
 
 
+def test_doc_payload_glue_lives_only_in_doc_payloads():
+    """``_doc_payloads`` is the one ``docs → (doc_id, payload)`` Arrow
+    stage: no other function here may carry a nested generator that
+    yields exactly the ``[["doc_id", "payload"]]`` projection — a
+    fixture passes ``make`` to ``_doc_payloads`` instead."""
+    tree = ast.parse(ENTRY.read_text())
+
+    def yields_doc_payload(node):
+        return (
+            isinstance(node, ast.Yield)
+            and isinstance(node.value, ast.Subscript)
+            and isinstance(node.value.slice, ast.List)
+            and [
+                e.value if isinstance(e, ast.Constant) else None
+                for e in node.value.slice.elts
+            ]
+            == ["doc_id", "payload"]
+        )
+
+    offenders = [
+        f"{fn.name}.{inner.name}:{inner.lineno}"
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef) and fn.name != "_doc_payloads"
+        for inner in ast.walk(fn)
+        if isinstance(inner, ast.FunctionDef) and inner is not fn
+        and any(yields_doc_payload(n) for n in ast.walk(inner))
+    ]
+    assert not offenders, f"copied doc→payload glue: {offenders}"
+
+
 def test_fixture_helpers_ship_by_value(spark):
     """UDF bodies call module-level fixture helpers (``_constant_image``
     …); executors must not need to import the entry module for them.
@@ -89,6 +119,17 @@ def test_fixture_helpers_ship_by_value(spark):
         assert sorted(bytes(r["payload"]) for r in rows) == sorted(
             image("bmp", 2, 2, i) for i in range(3)
         )
+        # a text column rides along as make's second argument, row by
+        # row, with a null text arriving as None
+        texts = [(0, "ab"), (1, None), (2, "xyz")]
+        docs = spark.createDataFrame(texts, "doc_id long, text string")
+        rows = mod._doc_payloads(
+            docs, lambda i, text: image("bmp", 2, 2, i) + repr(text).encode()
+        ).collect()
+        assert sorted((r["doc_id"], bytes(r["payload"])) for r in rows) == [
+            (i, image("bmp", 2, 2, i) + repr(text).encode())
+            for i, text in texts
+        ]
     finally:
         cloudpickle.unregister_pickle_by_value(mod)
         del sys.modules["entry_alias"]
