@@ -104,10 +104,15 @@ def _rid_from_partition_offsets(df: DataFrame) -> DataFrame:
         .withColumn(RID, F.coalesce(F.col("__off"), F.lit(0)) + F.col("__lrn"))
         .select(RID, *df.columns)
     )
-    # expose the pinned cache so a session-level owner can release it
-    # when the rid'd frame is discarded (EditorSession does on rebind);
-    # without this handle every with_rid call leaks one persisted copy
+    # expose the pin so its owner can release it; without this handle
+    # every with_rid call leaks one persisted copy.  EditorSession owns
+    # the pin of each with_rid it runs for the table's lifetime (every
+    # later edit, preview, pivot and undo entry reads it) and releases
+    # it in drop_table; a pin built only to preview a binding without
+    # __rid is released when that binding is replaced.  The row total
+    # rides along so callers need no count() job of their own
     out._pes_rid_base = annotated
+    out._pes_rid_rows = acc
     return out
 
 
@@ -118,6 +123,10 @@ def with_rid(df: DataFrame, order: Optional[Sequence[str]] = None) -> DataFrame:
     "row N as loaded" identity). ``order=[cols...]`` → total order by
     those columns via ``ordered_rid``.
     Idempotent: an existing ``__rid`` is trusted and kept.
+
+    A new numbering carries its persisted pin as ``_pes_rid_base``;
+    the caller owns it and unpersists it once nothing reads the
+    numbered frame (``EditorSession`` does so in ``drop_table``).
     """
     if RID in df.columns:
         return df

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parquet_editor_spark.operators import query as q
-from parquet_editor_spark.operators.edit import RID, with_rid
+from parquet_editor_spark.operators.edit import RID, ordered_rid, with_rid
 
 
 def line_series(
@@ -29,17 +29,24 @@ def line_series(
     """Line-plot series (main.pyc:371-374: index vs numeric columns),
     stride-downsampled so at most ~max_points rows reach the client
     regardless of table size. x = the row ordinal (the reference plots
-    against the pandas index)."""
-    cols = list(cols or q.numeric_columns(df))
+    against the pandas index); an editor table's own ``__rid`` is never
+    a series.
+
+    The result carries the persisted pin of its ``with_rid`` numbering
+    as ``_pes_rid_base``: unpersist it once the frame is collected
+    (``EditorSession.plot`` does)."""
+    cols = [c for c in cols or q.numeric_columns(df) if c != RID]
     if not cols:
         raise ValueError("no numeric columns to plot")  # main.pyc:405-416
-    d = with_rid(df.select(*cols), order) if order is None else with_rid(df, list(order)).select(RID, *cols)
-    n = d.count()
-    stride = max(1, math.ceil(n / max_points))
-    return (
+    d = with_rid(df.select(*cols)) if order is None else ordered_rid(df, list(order))
+    # the offset step of the numbering already counted the rows
+    stride = max(1, math.ceil(d._pes_rid_rows / max_points))
+    out = (
         d.filter(F.col(RID) % stride == 0)
         .select(F.col(RID).alias("x"), *cols)
     )
+    out._pes_rid_base = d._pes_rid_base
+    return out
 
 
 def scatter_sample(

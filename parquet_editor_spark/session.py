@@ -158,7 +158,13 @@ class EditorSession:
         self.spark = spark or get_spark()
         self.settings = settings or SessionSettings.load()
         self._tables: dict[str, DataFrame] = {}
+        #: ordinal view of a binding without __rid, holding the private
+        #: pin _rid_frame built for it
         self._rid_frames: dict[str, DataFrame] = {}
+        #: pins that EditorSession.with_rid created, per table; every
+        #: later binding and undo entry derives from them, so they live
+        #: until drop_table
+        self._pins: dict[str, list[DataFrame]] = {}
         self._undo: dict[str, list[DataFrame]] = {}
         self._redo: dict[str, list[DataFrame]] = {}
         self._edit_depth: dict[str, int] = {}
@@ -207,27 +213,36 @@ class EditorSession:
         return df
 
     def _release_rid_frame(self, name: str) -> None:
+        """Release the private pin ``_rid_frame`` built for the binding.
+        A binding that carries ``__rid`` has none: the pin under it
+        belongs to the table (``_pins``, released by ``drop_table``)."""
         cached = self._rid_frames.pop(name, None)
-        base = getattr(cached, "_pes_rid_base", None)
-        if base is not None:
-            base.unpersist()
+        if cached is not None:
+            cached._pes_rid_base.unpersist()
 
-    def _rid_frame(self, name: str):
-        """Per-binding cached ordinal view: with_rid pins a persisted
-        copy of the table to keep ordinals stable, so it must be built
-        ONCE per binding and released on rebind — rebuilding it per
-        preview page would leak one materialized copy per page."""
+    def _rid_frame(self, name: str) -> DataFrame:
+        """Ordinal view for preview.  A binding with ``__rid`` is its own
+        view.  Otherwise with_rid pins a private persisted copy to keep
+        ordinals stable; it is built ONCE per binding and released on
+        rebind — rebuilding it per preview page would leak one
+        materialized copy per page."""
+        from parquet_editor_spark.operators.edit import RID, with_rid
+
+        df = self._tables[name]
+        if RID in df.columns:
+            return df
         if name not in self._rid_frames:
-            from parquet_editor_spark.operators.edit import with_rid
-
-            self._rid_frames[name] = with_rid(self._tables[name])
+            self._rid_frames[name] = with_rid(df)
         return self._rid_frames[name]
 
     def drop_table(self, name: str) -> None:
+        """Drop the table, its undo/redo history and every pin it owns."""
         self._tables.pop(name, None)
         self._undo.pop(name, None)
         self._redo.pop(name, None)
         self._release_rid_frame(name)
+        for pin in self._pins.pop(name, []):
+            pin.unpersist()
         self.spark.catalog.dropTempView(name)
 
     # -- undo / redo -------------------------------------------------
@@ -308,9 +323,11 @@ class EditorSession:
 
         df = self._tables[name]
         if kind == "line":
-            pdf = P.line_series(
-                df, kw.get("cols"), kw.get("max_points", 1000)
-            ).toPandas()
+            series = P.line_series(df, kw.get("cols"), kw.get("max_points", 1000))
+            try:
+                pdf = series.toPandas()
+            finally:
+                series._pes_rid_base.unpersist()
             return P.render_line_svg(pdf, title=kw.get("title", name))
         if kind == "scatter":
             x, y = kw["x"], kw["y"]
@@ -331,9 +348,19 @@ class EditorSession:
 
     # -- editor mutations (PandasModel.setData et al., SURVEY.md §2.3) --
     def with_rid(self, name: str, order=None) -> DataFrame:
+        """Number the rows of ``name`` (``operators.edit.with_rid``) and
+        rebind it.  The session owns the pin this creates: every later
+        edit, preview, pivot and undo entry of the table reads it, so it
+        stays cached until ``drop_table``.  On a table that already has
+        ``__rid`` the call changes nothing and adds no pin."""
         from parquet_editor_spark.operators import edit as E
 
-        return self.bind(name, E.with_rid(self._tables[name], order), undoable=False)
+        df = self._tables[name]
+        if E.RID in df.columns:
+            return df
+        df = E.with_rid(df, order)
+        self._pins.setdefault(name, []).append(df._pes_rid_base)
+        return self.bind(name, df, undoable=False)
 
     def set_cell(self, name: str, rid: int, column: str, value) -> DataFrame:
         """Typed positional cell write (main.pyc:68-79); overlay
@@ -386,11 +413,14 @@ class EditorSession:
         # bare limit(n) would take n rows in physical partition order,
         # which can disagree with the ordinal order after a splice
         # (union-appended rows carry interleaved rids), duplicating or
-        # dropping rows across page boundaries
-        return (
+        # dropping rows across page boundaries.  The page is at most n
+        # rows, so it is sorted on the driver: a distributed orderBy
+        # adds a range-sampling job and a shuffle for n rows
+        from parquet_editor_spark.operators.edit import RID
+
+        page = (
             self._rid_frame(name)
-            .filter(f"__rid >= {offset} AND __rid < {offset + n}")
-            .orderBy("__rid")
-            .drop("__rid")
+            .filter(f"{RID} >= {offset} AND {RID} < {offset + n}")
             .toPandas()
         )
+        return page.sort_values(RID).drop(columns=RID).reset_index(drop=True)

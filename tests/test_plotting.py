@@ -22,6 +22,30 @@ def test_line_series_small_table_untouched(spark):
     assert out.count() == 7
 
 
+def test_line_series_runs_no_job_beyond_its_numbering(spark):
+    """The stride needs the row total, which the numbering's offset
+    step already counted: no count() job of its own."""
+    from parquet_editor_spark.operators.edit import with_rid
+
+    df = spark.createDataFrame([(float(i),) for i in range(7)], "v double")
+
+    def jobs(group, build):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            built = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), built
+
+    # the numbering goes first: a frame's first job may carry set-up
+    n_numbering, numbered = jobs("numbering", lambda: with_rid(df))
+    n_series, series = jobs("line-series", lambda: PL.line_series(df, ["v"]))
+    assert n_series <= n_numbering
+    series._pes_rid_base.unpersist()
+    numbered._pes_rid_base.unpersist()
+
+
 def test_line_series_rejects_non_numeric(spark):
     df = spark.createDataFrame([("a",)], "s string")
     with pytest.raises(ValueError, match="no numeric columns"):

@@ -248,6 +248,19 @@ def test_pivot_round_handles_dotted_pivot_values(spark):
     assert got["b"] == (30.0, None)
 
 
+def test_pivot_first_known_values_matches_discovered(spark):
+    """A when-guarded first() would take the null a non-matching row
+    feeds it (a/y came out null); both paths must agree."""
+    df = spark.createDataFrame(
+        [("a", "x", 1), ("a", "y", 2), ("b", "x", 3)],
+        "k string, c string, v long",
+    )
+    known = q.pivot_table(df, "k", "c", "v", "first", pivot_values=["x", "y"])
+    found = q.pivot_table(df, "k", "c", "v", "first")
+    assert known.collect() == found.collect()
+    assert [tuple(r) for r in known.collect()] == [("a", 1, 2), ("b", 3, None)]
+
+
 def test_corr_matrix_constant_column_yields_null(spark):
     df = spark.createDataFrame(
         [(1.0, 5.0), (2.0, 5.0), (3.0, 5.0)], "x double, c double"

@@ -51,14 +51,86 @@ def test_preview_tracks_undo_redo(sess, sf_dir):
     assert len(sess.preview("t", n=100)) == 2
 
 
-def test_drop_table_releases_rid_cache(sess, sf_dir):
+def _is_cached(df) -> bool:
+    return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.fixture()
+def region(sf_dir, tmp_path):
+    """A private copy of region: with_rid on the same source plan in
+    another test would share this test's cache entry."""
+    import pandas as pd
+
+    path = str(tmp_path / "region.parquet")
+    pd.read_parquet(f"{sf_dir}/region.parquet").to_parquet(path)
+    return path
+
+
+def test_drop_table_releases_rid_cache(sess, region):
     """Regression (ADVICE r4): drop_table() must release the persisted
     with_rid base, not just the catalog entry."""
-    sess.load("t", f"{sf_dir}/region.parquet")
+    sess.load("t", region)
     sess.preview("t", n=3)  # builds + persists the rid frame
-    assert "t" in sess._rid_frames
+    base = sess._rid_frames["t"]._pes_rid_base
+    assert _is_cached(base)
     sess.drop_table("t")
     assert "t" not in sess._rid_frames
+    assert not _is_cached(base)
+
+
+def test_with_rid_pin_outlives_edits_undo_and_redo(sess, region):
+    """Every binding after with_rid, undo entries included, derives
+    from its pin: an edit must not unpersist it, or each later
+    preview and pivot re-runs the numbering pass over the source."""
+    sess.load("t", region)
+    pin = sess.with_rid("t")._pes_rid_base
+    sess.preview("t", n=3)
+    sess.set_cell("t", 0, "r_name", "X")
+    sess.undo("t")
+    sess.redo("t")
+    assert _is_cached(pin)
+    assert sess.preview("t", n=1)["r_name"].tolist() == ["X"]
+    sess.drop_table("t")
+    assert not _is_cached(pin)
+
+
+def test_drop_table_releases_pin_taken_without_preview(spark, sess, region):
+    before = _persistent_rdds(spark)
+    sess.load("t", region)
+    sess.with_rid("t")
+    sess.set_cell("t", 1, "r_name", "Y")
+    assert _persistent_rdds(spark) == before + 1
+    sess.drop_table("t")
+    assert _persistent_rdds(spark) == before
+
+
+def test_repeated_with_rid_adds_no_pin(spark, sess, region):
+    sess.load("t", region)
+    first = sess.with_rid("t")
+    n = _persistent_rdds(spark)
+    assert sess.with_rid("t") is first
+    assert sess.with_rid("t", order=["r_name"]) is first
+    assert len(sess._pins["t"]) == 1 and _persistent_rdds(spark) == n
+    sess.drop_table("t")
+
+
+def test_line_plot_skips_rid_and_releases_its_pin(spark, sess, region):
+    from parquet_editor_spark.operators import plotting as P
+
+    sess.load("t", region)
+    sess.with_rid("t")
+    series = P.line_series(sess.get("t"))
+    assert series.columns == ["x", "r_regionkey"]
+    series._pes_rid_base.unpersist()
+    n = _persistent_rdds(spark)
+    svg = sess.plot("t", "line")
+    assert svg.count("<polyline") == 1  # r_regionkey only
+    assert _persistent_rdds(spark) == n
+    sess.drop_table("t")
 
 
 def test_new_edit_invalidates_redo(sess, sf_dir):
