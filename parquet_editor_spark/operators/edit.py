@@ -26,6 +26,7 @@ Scale design (SURVEY.md §4 "custom work"):
 
 from __future__ import annotations
 
+import itertools
 from typing import Iterable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -35,6 +36,9 @@ from pyspark.sql import types as T
 from parquet_editor_spark.litexpr import lit_longs
 
 RID = "__rid"
+
+#: one token per numbering, see ``_rid_from_partition_offsets``
+_numbering_ids = itertools.count()
 
 
 # ---------------------------------------------------------------------------
@@ -65,7 +69,11 @@ def _rid_from_partition_offsets(df: DataFrame) -> DataFrame:
         ]
     )
 
-    def add_lrn(batches):
+    # Spark matches a plan to cache against cached ones by the pickled
+    # function, so two numberings of one source would share one cache
+    # entry and unpersisting either pin would release both.  The token
+    # in the function's defaults gives every numbering its own pin
+    def add_lrn(batches, _numbering=next(_numbering_ids)):
         # TaskContext gives the real partition index inside the worker;
         # spark_partition_id() is unreliable across re-evaluations of
         # local/Arrow plans.

@@ -29,23 +29,28 @@ def line_series(
     """Line-plot series (main.pyc:371-374: index vs numeric columns),
     stride-downsampled so at most ~max_points rows reach the client
     regardless of table size. x = the row ordinal (the reference plots
-    against the pandas index); an editor table's own ``__rid`` is never
-    a series.
+    against the pandas index): an editor table's own ``__rid``, the
+    position the editor shows, which is never a series itself.
 
-    The result carries the persisted pin of its ``with_rid`` numbering
-    as ``_pes_rid_base``: unpersist it once the frame is collected
-    (``EditorSession.plot`` does)."""
+    A table without ``__rid``, or an ``order=``, is numbered here; the
+    result then carries that numbering's persisted pin as
+    ``_pes_rid_base`` (else None): unpersist it once the frame is
+    collected (``EditorSession.plot`` does)."""
     cols = [c for c in cols or q.numeric_columns(df) if c != RID]
     if not cols:
         raise ValueError("no numeric columns to plot")  # main.pyc:405-416
-    d = with_rid(df.select(*cols)) if order is None else ordered_rid(df, list(order))
-    # the offset step of the numbering already counted the rows
-    stride = max(1, math.ceil(d._pes_rid_rows / max_points))
+    if order is None and RID in df.columns:
+        d, rows, pin = df.select(RID, *cols), df.count(), None
+    else:
+        d = with_rid(df.select(*cols)) if order is None else ordered_rid(df, list(order))
+        # the offset step of the numbering already counted the rows
+        rows, pin = d._pes_rid_rows, d._pes_rid_base
+    stride = max(1, math.ceil(rows / max_points))
     out = (
         d.filter(F.col(RID) % stride == 0)
         .select(F.col(RID).alias("x"), *cols)
     )
-    out._pes_rid_base = d._pes_rid_base
+    out._pes_rid_base = pin
     return out
 
 

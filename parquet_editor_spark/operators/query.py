@@ -45,7 +45,9 @@ AGG_FUNCS = {
     "count_distinct": F.count_distinct,
     "approx_count_distinct": F.approx_count_distinct,
     "stddev": F.stddev,
-    "first": F.first,
+    # skips nulls like pandas' first (and Spark's own pivot, which
+    # rewrites first() so); a when-guarded pivot depends on it
+    "first": lambda c: F.first(c, ignorenulls=True),
 }
 
 
@@ -82,19 +84,15 @@ def pivot_table(
     job — at 100 TB the distinct-values pre-pass is a full scan worth
     skipping; pivot keys must be low-cardinality regardless.
 
-    With ``pivot_values`` every aggfunc but ``first`` plans as
-    when-guarded aggregates, which ignore the nulls a non-matching row
-    feeds them.  ``first`` does not ignore them, so it goes through
-    ``pivot(columns, pivot_values)`` instead (still no distinct job).
-    ``count``/``count_distinct`` there give 0, not null, for an
-    absent (index, column) pair — the value the ``pivot_count`` and
-    ``pivot_count_distinct`` oracles pin.
+    With ``pivot_values`` the aggregates are when-guarded, so every
+    non-matching row feeds them a null; they all skip nulls (``first``
+    too, see ``AGG_FUNCS``).  There ``count``/``count_distinct`` give
+    0, not null, for an absent (index, column) pair — the value the
+    ``pivot_count`` and ``pivot_count_distinct`` oracles pin.
     """
     fn = agg_fn(aggfunc)
     filtered = df.filter(F.col(index).isNotNull() & F.col(columns).isNotNull())
-    if pivot_values and aggfunc == "first":
-        out = filtered.groupBy(index).pivot(columns, list(pivot_values)).agg(fn(values))
-    elif pivot_values:
+    if pivot_values:
         # known pivot domain → plan as plain when-guarded aggregates:
         # one partial+final agg pass, no pivot operator overhead and no
         # distinct-values job (measured ~2× faster than groupBy.pivot)

@@ -325,9 +325,12 @@ class EditorSession:
         if kind == "line":
             series = P.line_series(df, kw.get("cols"), kw.get("max_points", 1000))
             try:
-                pdf = series.toPandas()
+                # a splice leaves rows physically out of ordinal order;
+                # the polyline must follow x, the editor's order
+                pdf = series.toPandas().sort_values("x")
             finally:
-                series._pes_rid_base.unpersist()
+                if series._pes_rid_base is not None:
+                    series._pes_rid_base.unpersist()
             return P.render_line_svg(pdf, title=kw.get("title", name))
         if kind == "scatter":
             x, y = kw["x"], kw["y"]

@@ -59,21 +59,10 @@ def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
-@pytest.fixture()
-def region(sf_dir, tmp_path):
-    """A private copy of region: with_rid on the same source plan in
-    another test would share this test's cache entry."""
-    import pandas as pd
-
-    path = str(tmp_path / "region.parquet")
-    pd.read_parquet(f"{sf_dir}/region.parquet").to_parquet(path)
-    return path
-
-
-def test_drop_table_releases_rid_cache(sess, region):
+def test_drop_table_releases_rid_cache(sess, sf_dir):
     """Regression (ADVICE r4): drop_table() must release the persisted
     with_rid base, not just the catalog entry."""
-    sess.load("t", region)
+    sess.load("t", f"{sf_dir}/region.parquet")
     sess.preview("t", n=3)  # builds + persists the rid frame
     base = sess._rid_frames["t"]._pes_rid_base
     assert _is_cached(base)
@@ -82,11 +71,11 @@ def test_drop_table_releases_rid_cache(sess, region):
     assert not _is_cached(base)
 
 
-def test_with_rid_pin_outlives_edits_undo_and_redo(sess, region):
+def test_with_rid_pin_outlives_edits_undo_and_redo(sess, sf_dir):
     """Every binding after with_rid, undo entries included, derives
     from its pin: an edit must not unpersist it, or each later
     preview and pivot re-runs the numbering pass over the source."""
-    sess.load("t", region)
+    sess.load("t", f"{sf_dir}/region.parquet")
     pin = sess.with_rid("t")._pes_rid_base
     sess.preview("t", n=3)
     sess.set_cell("t", 0, "r_name", "X")
@@ -98,9 +87,9 @@ def test_with_rid_pin_outlives_edits_undo_and_redo(sess, region):
     assert not _is_cached(pin)
 
 
-def test_drop_table_releases_pin_taken_without_preview(spark, sess, region):
+def test_drop_table_releases_pin_taken_without_preview(spark, sess, sf_dir):
     before = _persistent_rdds(spark)
-    sess.load("t", region)
+    sess.load("t", f"{sf_dir}/region.parquet")
     sess.with_rid("t")
     sess.set_cell("t", 1, "r_name", "Y")
     assert _persistent_rdds(spark) == before + 1
@@ -108,8 +97,8 @@ def test_drop_table_releases_pin_taken_without_preview(spark, sess, region):
     assert _persistent_rdds(spark) == before
 
 
-def test_repeated_with_rid_adds_no_pin(spark, sess, region):
-    sess.load("t", region)
+def test_repeated_with_rid_adds_no_pin(spark, sess, sf_dir):
+    sess.load("t", f"{sf_dir}/region.parquet")
     first = sess.with_rid("t")
     n = _persistent_rdds(spark)
     assert sess.with_rid("t") is first
@@ -118,18 +107,54 @@ def test_repeated_with_rid_adds_no_pin(spark, sess, region):
     sess.drop_table("t")
 
 
-def test_line_plot_skips_rid_and_releases_its_pin(spark, sess, region):
+def test_tables_from_one_source_own_their_pins(sess, sf_dir):
+    """Two numberings of one source plan must not share a cache entry:
+    dropping one table would release the other's pin."""
+    path = f"{sf_dir}/region.parquet"
+    sess.load("a", path)
+    sess.load("b", path)
+    pin_a = sess.with_rid("a")._pes_rid_base
+    pin_b = sess.with_rid("b")._pes_rid_base
+    sess.drop_table("a")
+    assert not _is_cached(pin_a)
+    assert _is_cached(pin_b)
+    sess.drop_table("b")
+
+
+def test_line_plot_skips_rid_and_releases_its_pin(spark, sess, sf_dir):
     from parquet_editor_spark.operators import plotting as P
 
-    sess.load("t", region)
+    sess.load("t", f"{sf_dir}/region.parquet")
+    n = _persistent_rdds(spark)
+    sess.plot("t", "line")  # numbered for the plot only
+    assert _persistent_rdds(spark) == n
     sess.with_rid("t")
     series = P.line_series(sess.get("t"))
     assert series.columns == ["x", "r_regionkey"]
-    series._pes_rid_base.unpersist()
-    n = _persistent_rdds(spark)
+    assert series._pes_rid_base is None  # x is the table's own __rid
     svg = sess.plot("t", "line")
     assert svg.count("<polyline") == 1  # r_regionkey only
-    assert _persistent_rdds(spark) == n
+    sess.drop_table("t")
+
+
+def test_line_plot_x_follows_editor_order_after_splice(spark, sess):
+    """Pasted rows sit last physically; their __rid places them where
+    the editor shows them, and so must the plot."""
+    from parquet_editor_spark.operators import plotting as P
+
+    sess.bind("t", spark.createDataFrame([(float(i),) for i in range(7)], "v double"))
+    sess.with_rid("t")
+    sess.cut_rows("t", [1, 2])
+    sess.paste_rows("t", 3)
+    shown = sess.preview("t", n=10)["v"].tolist()
+    assert shown == [0, 3, 4, 1, 2, 5, 6]
+    pdf = P.line_series(sess.get("t")).toPandas().sort_values("x")
+    assert pdf["x"].tolist() == list(range(7))
+    assert pdf["v"].tolist() == shown
+    # the polyline runs left to right
+    points = sess.plot("t", "line").split('points="')[1].split('"')[0]
+    xs = [float(p.split(",")[0]) for p in points.split()]
+    assert xs == sorted(xs)
     sess.drop_table("t")
 
 
